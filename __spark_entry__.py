@@ -396,6 +396,26 @@ _ER_SURFACES = [
 ]
 
 
+def _er_planted_transcripts(spark, sf_dir):
+    """One single-turn conversation per document (input_hint schema): the
+    doc's planted surface between two 8-char md5-hex filler tokens."""
+    docs = _t(spark, sf_dir, "documents")
+    lab = F.element_at(
+        F.array(*[F.lit(x) for x in _ER_SURFACES]), (F.pmod(F.col("doc_id"), F.lit(7)) + 1).cast("int")
+    )
+    return docs.select(
+        F.col("doc_id").cast("string").alias("conv_id"),
+        F.lit(0).alias("turn_idx"),
+        F.lit("user").alias("role"),
+        F.concat(
+            F.substring(F.md5(F.col("text")), 1, 8), F.lit(" "), lab, F.lit(" "),
+            F.substring(F.md5(F.col("text")), 9, 8),
+        ).alias("text"),
+        F.lit("none").alias("tool"),
+        F.lit(None).cast("timestamp").alias("ts"),
+    )
+
+
 def q_er_mentions(spark, sf_dir):
     """Q1/Q4/Q8/Q9: the full ER mention scan (two normalization layers,
     offset remap to original coordinates, layer merge, keyword
@@ -406,19 +426,7 @@ def q_er_mentions(spark, sf_dir):
     from pilsner_spark.operators.mentions import extract_mentions_df
     from pilsner_spark.sources.sample_dictionary import build_sample_model
 
-    docs = _t(spark, sf_dir, "documents")
-    lab = F.element_at(
-        F.array(*[F.lit(x) for x in _ER_SURFACES]), (F.pmod(F.col("doc_id"), F.lit(7)) + 1).cast("int")
-    )
-    tr = docs.select(
-        F.col("doc_id").cast("string").alias("conv_id"),
-        F.lit(0).alias("turn_idx"),
-        F.concat(
-            F.substring(F.md5(F.col("text")), 1, 8), F.lit(" "), lab, F.lit(" "),
-            F.substring(F.md5(F.col("text")), 9, 8),
-        ).alias("text"),
-    )
-    mentions = extract_mentions_df(tr, build_sample_model())
+    mentions = extract_mentions_df(_er_planted_transcripts(spark, sf_dir), build_sample_model())
     return mentions.select(
         F.col("conv_id").cast("bigint").alias("doc_id"),
         "begin",
@@ -436,39 +444,24 @@ def q_er_clusters(spark, sf_dir):
     token, giving four components: surfaces {1,2} (entity2 via shared
     'awesome'/'white'), {3,4,5} (entity1, bridged by 'refrigerator'),
     {'it'}, {'o'}. Cluster id = lexicographic-min member turn_key (the
-    collision-free label domain of connected_components)."""
-    from pilsner_spark.operators.blocking import (
-        candidate_pairs,
-        salt_oversized_blocks,
-        token_blocks,
-        with_turn_key,
-    )
-    from pilsner_spark.operators.clustering import cluster_turns
-    from pilsner_spark.operators.mentions import extract_mentions_df, normalized_text_df, turn_entities_df
-    from pilsner_spark.operators.scoring import match_edges, score_pairs, turn_features
+    collision-free label domain of connected_components).
+
+    The clusters come from ``run_er_pipeline`` with its default plan
+    (salted token + MinHash blocks, split scorer, compact scored layout,
+    the lineage-chosen edge source) in a throwaway workdir, so the oracle
+    checks the same code that produces the benchmark's clusters."""
+    import shutil
+    import tempfile
+
+    from pilsner_spark.plans.pipeline import run_er_pipeline
     from pilsner_spark.sources.sample_dictionary import build_sample_model
 
-    model = build_sample_model()
-    docs = _t(spark, sf_dir, "documents")
-    lab = F.element_at(
-        F.array(*[F.lit(x) for x in _ER_SURFACES]), (F.pmod(F.col("doc_id"), F.lit(7)) + 1).cast("int")
-    )
-    tr = docs.select(
-        F.col("doc_id").cast("string").alias("conv_id"),
-        F.lit(0).alias("turn_idx"),
-        F.lit("user").alias("role"),
-        F.concat(
-            F.substring(F.md5(F.col("text")), 1, 8), F.lit(" "), lab, F.lit(" "),
-            F.substring(F.md5(F.col("text")), 9, 8),
-        ).alias("text"),
-        F.lit("none").alias("tool"),
-        F.lit(None).cast("timestamp").alias("ts"),
-    ).localCheckpoint()
-    turns = with_turn_key(normalized_text_df(tr, model))
-    blocks, _ = salt_oversized_blocks(token_blocks(turns), 400, 16)
-    pairs = candidate_pairs(blocks)
-    feats = turn_features(turns, with_turn_key(turn_entities_df(extract_mentions_df(tr, model))))
-    clusters = cluster_turns(turns, match_edges(score_pairs(pairs, feats)))
+    tr = _er_planted_transcripts(spark, sf_dir).localCheckpoint()
+    workdir = tempfile.mkdtemp(prefix="er_clusters_")
+    try:
+        clusters = run_er_pipeline(spark, workdir, tr, model=build_sample_model())["clusters"].localCheckpoint()
+    finally:
+        shutil.rmtree(workdir, ignore_errors=True)
     return clusters.groupBy("cluster_id").agg(F.count("*").alias("n_turns")).filter(F.col("n_turns") > 1)
 
 
@@ -1110,13 +1103,11 @@ def q_corpus_profile(spark, sf_dir):
 
 def q_bpe_merges(spark, sf_dir):
     """BPE tokenizer training (Sennrich et al. 2016) over the documents
-    corpus, mode='local' (the 100 TB shape): ONE corpus word-count
-    shuffle + collect of the O(vocabulary) word table, then the exact
-    sequential merge loop runs driver-side with incremental pair updates
-    — zero per-merge Spark jobs (the r4 shape cost one job barrier per
-    merge; VERDICT r4 perf item). Iterative algorithm — no SQL oracle per
-    the driver contract (rows-only check); parity vs a pure-Python
-    subword-nmt reference AND vs mode='distributed' is pinned by
+    corpus: ONE corpus word-count shuffle + collect of the O(vocabulary)
+    word table, then the exact sequential merge loop runs driver-side with
+    incremental pair updates — zero per-merge Spark jobs. Iterative
+    algorithm — no SQL oracle per the driver contract (rows-only check);
+    parity vs a pure-Python subword-nmt reference is pinned by
     tests/test_tokenizer.py. Deterministic: ties break
     (count desc, left asc, right asc)."""
     from pilsner_spark.operators.tokenizer import learn_bpe_merges

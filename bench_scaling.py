@@ -24,26 +24,9 @@ import statistics
 import subprocess
 import sys
 
+from bench import read_proc_stat, telemetry_delta
+
 REPO = os.path.dirname(os.path.abspath(__file__))
-
-
-def read_proc_stat():
-    """Aggregate cpu jiffies (user, nice, system, idle, iowait, irq,
-    softirq, steal) — per-leg host-noise telemetry (VERDICT r3 item 1:
-    degraded windows must be machine-detectable, not argued post-hoc)."""
-    with open("/proc/stat") as f:
-        parts = f.readline().split()
-    return [int(x) for x in parts[1:9]]
-
-
-def telemetry_delta(before, after) -> dict:
-    d = [b - a for a, b in zip(before, after)]
-    total = sum(d) or 1
-    return {
-        "steal_pct": round(100.0 * d[7] / total, 2),
-        "sys_pct": round(100.0 * d[2] / total, 2),
-        "iowait_pct": round(100.0 * d[4] / total, 2),
-    }
 
 
 def run_once(cpus: int, scale: float, entities: int, seed: int, max_token_df=None) -> dict:

@@ -15,10 +15,9 @@ never needs to fit anywhere:
 * ``learn_bpe_merges`` — the Sennrich loop: count adjacent symbol pairs
   weighted by word count (overlapping zip-style occurrences, matching
   subword-nmt's get_stats), merge the most frequent pair everywhere
-  (greedy left-to-right, JVM ``aggregate`` expression — no Python), and
-  repeat. Each merge iteration is one hash-agg job + a 1-row argmax
-  collect over the vocabulary table; lineage is truncated by periodic
-  localCheckpoint so iteration N does not replay iterations 1..N-1.
+  (greedy left-to-right), and repeat. The loop runs driver-side over the
+  collected distinct-word table with incremental pair-count updates, so
+  the corpus contributes one Spark job however many merges are learned.
   Deterministic: ties break (count desc, left asc, right asc).
 * ``bpe_segment_words`` — application. Segmenting is per-WORD, so it
   runs once per distinct word (an Arrow-batched pandas UDF over the
@@ -70,48 +69,6 @@ def word_counts(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     )
 
 
-def _symbols(word_col):
-    """Initial symbol sequence: characters + the end-of-word marker as its
-    own symbol (Sennrich's setup — merges crossing the marker learn
-    word-final subwords)."""
-    return F.concat(F.split(word_col, ""), F.array(F.lit(END_OF_WORD)))
-
-
-def _adjacent_pairs(syms_col):
-    """All adjacent (left, right) symbol pairs, overlapping zip-style —
-    the counting convention of subword-nmt's get_stats."""
-    return F.when(
-        F.size(syms_col) < 2, F.array().cast("array<struct<left:string,right:string>>")
-    ).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), F.size(syms_col) - 1),
-            lambda i: F.struct(
-                F.element_at(syms_col, i).alias("left"),
-                F.element_at(syms_col, i + 1).alias("right"),
-            ),
-        )
-    )
-
-
-def _merge_pair(syms_col, left: str, right: str):
-    """Greedy left-to-right merge of every adjacent (left, right) into the
-    concatenated symbol — a pure JVM aggregate expression. 'aaa' under
-    (a, a) becomes ['aa', 'a']: a freshly merged symbol never re-merges
-    with the next element in the same pass, matching subword-nmt."""
-    return F.aggregate(
-        syms_col,
-        F.array().cast("array<string>"),
-        lambda acc, s: F.when(
-            (F.size(acc) > 0)
-            & (F.element_at(acc, -1) == F.lit(left))
-            & (s == F.lit(right)),
-            F.concat(
-                F.slice(acc, F.lit(1), F.size(acc) - 1), F.array(F.lit(left + right))
-            ),
-        ).otherwise(F.concat(acc, F.array(s))),
-    )
-
-
 def _local_bpe(
     wc_rows: List[Tuple[str, int]], n_merges: int, min_pair_count: int
 ) -> List[Tuple[int, str, str, str, int]]:
@@ -120,8 +77,8 @@ def _local_bpe(
     heap for the argmax (subword-nmt's own data-structure shape). Per
     merge only the words containing the winning pair are touched, so the
     cost is O(occurrences), not O(vocabulary) — a 32k-merge vocabulary is
-    minutes of driver CPU, zero Spark jobs. Tie-break identical to the
-    distributed loop: (count desc, left asc, right asc)."""
+    minutes of driver CPU, zero Spark jobs. Tie-break: (count desc, left
+    asc, right asc)."""
     import heapq
     from collections import defaultdict
 
@@ -166,7 +123,8 @@ def _local_bpe(
             out, j, changed = [], 0, False
             while j < len(syms):
                 # greedy left-to-right; a freshly merged symbol never
-                # re-merges in the same pass (matches _merge_pair)
+                # re-merges in the same pass ('aaa' under (a, a) becomes
+                # ['aa', 'a'], matching subword-nmt)
                 if j + 1 < len(syms) and syms[j] == a and syms[j + 1] == b:
                     out.append(merged)
                     j += 2
@@ -194,9 +152,7 @@ def learn_bpe_merges(
     min_pair_count: int = 2,
     id_col: str = "doc_id",
     text_col: str = "text",
-    checkpoint_every: int = 8,
     counts: Optional[DataFrame] = None,
-    mode: str = "local",
 ) -> DataFrame:
     """Learn a BPE merge table from the corpus. Returns a DataFrame
     (rank, left, right, merged, pair_count): rank is merge order (0-based,
@@ -205,59 +161,27 @@ def learn_bpe_merges(
     ``min_pair_count`` (the returned table is then shorter than
     ``n_merges`` — visible, not padded).
 
-    ``mode='local'`` (default, the 100 TB shape): the corpus contributes
-    exactly ONE distributed job — the :func:`word_counts` hash agg — and
-    the merge loop runs driver-side over the collected DISTINCT-WORD
-    table with incremental pair updates. The word table is O(vocabulary):
-    it grows ~logarithmically with corpus size (tens of millions of rows
-    at web scale, a few GB — driver-collectable; pre-prune with a
-    min-count filter on ``counts`` if not). This replaces the r4 shape
-    whose 32k-merge vocabulary cost 32k Spark job barriers (VERDICT r4
-    perf item): per-merge driver round-trips are gone, and the result is
-    BIT-IDENTICAL to the sequential algorithm — unlike batched disjoint
-    merging, which diverges whenever a merge creates a pair that outranks
-    a later selection.
-
-    ``mode='distributed'`` keeps the in-cluster loop for vocabularies
-    too large to collect: each iteration is one hash-agg job over the
-    vocabulary table plus a 1-row argmax collect, with localCheckpoint
-    every ``checkpoint_every`` merges to keep lineage flat — O(n_merges)
-    job barriers, only acceptable for small merge counts.
+    The corpus contributes exactly ONE distributed job — the
+    :func:`word_counts` hash agg — and the merge loop runs driver-side
+    over the collected DISTINCT-WORD table with incremental pair updates.
+    The word table is O(vocabulary): it grows ~logarithmically with
+    corpus size (tens of millions of rows at web scale, a few GB —
+    driver-collectable; pre-prune with a min-count filter on ``counts``
+    if not). No per-merge job barriers, and the result is BIT-IDENTICAL
+    to the sequential algorithm — unlike batched disjoint merging, which
+    diverges whenever a merge creates a pair that outranks a later
+    selection.
 
     Pass ``counts`` (a (word, count) DataFrame) to skip the corpus scan —
-    e.g. the persisted output of :func:`word_counts`. Both modes share
-    tie-breaking (count desc, left asc, right asc) and are parity-pinned
-    in tests/test_tokenizer.py."""
+    e.g. the persisted output of :func:`word_counts`. Parity is pinned
+    against a pure-Python subword-nmt reference in
+    tests/test_tokenizer.py."""
     wc = counts if counts is not None else word_counts(docs, id_col, text_col)
     spark = docs.sparkSession if docs is not None else wc.sparkSession
-    if mode == "local":
-        wc_rows = [(r["word"], r["count"]) for r in wc.collect()]
-        merges = _local_bpe(wc_rows, n_merges, min_pair_count)
-        return spark.createDataFrame(
-            merges, "rank int, left string, right string, merged string, pair_count long"
-        )
-    if mode != "distributed":
-        raise ValueError(f"mode must be 'local' or 'distributed', got {mode!r}")
-    vocab = wc.select(_symbols(F.col("word")).alias("syms"), "count").localCheckpoint()
-    merges = []
-    for rank in range(n_merges):
-        top = (
-            vocab.select(F.explode(_adjacent_pairs(F.col("syms"))).alias("p"), "count")
-            .groupBy("p.left", "p.right")
-            .agg(F.sum("count").alias("pair_count"))
-            .orderBy(F.desc("pair_count"), F.asc("left"), F.asc("right"))
-            .limit(1)
-            .collect()
-        )
-        if not top or top[0]["pair_count"] < min_pair_count:
-            break
-        left, right, cnt = top[0]["left"], top[0]["right"], int(top[0]["pair_count"])
-        merges.append((rank, left, right, left + right, cnt))
-        vocab = vocab.select(_merge_pair(F.col("syms"), left, right).alias("syms"), "count")
-        if (rank + 1) % checkpoint_every == 0:
-            vocab = vocab.localCheckpoint()
+    wc_rows = [(r["word"], r["count"]) for r in wc.collect()]
     return spark.createDataFrame(
-        merges, "rank int, left string, right string, merged string, pair_count long"
+        _local_bpe(wc_rows, n_merges, min_pair_count),
+        "rank int, left string, right string, merged string, pair_count long",
     )
 
 

@@ -237,19 +237,20 @@ def run_er_pipeline(
     else:
         pairs = pipe.stage("candidate_pairs", build_pairs)
     features = turn_features(turns, mention_entities)
-    # Split scored plan (VERDICT r2 item 2): stage 1 is pure codegen (no
-    # ArrowEvalPython over |pairs|); stage 2 re-reads the checkpoint with
-    # a pushed undecided=true filter and runs JW/Levenshtein on that slice
-    # only. score_pairs (single-pass, masked inputs) remains the right
-    # shape for non-checkpointing callers — here the materialization is
-    # free because the stage checkpoints anyway.
+    # Split scored plan: stage 1 is pure codegen (no ArrowEvalPython over
+    # |pairs|); stage 2 re-reads the checkpoint with a pushed
+    # undecided=true filter and runs JW/Levenshtein on that slice only.
+    # Keep the JW kernel off the full pair table: the split costs nothing
+    # extra here because the stage checkpoints anyway.
     # compact_scored (the default): of the O(pairs) scored rows, downstream
     # only ever reads the shared-entity rows (decided match edges) and the
-    # undecided rows (the JW slice) — typically <2% of the mass. Writing
-    # the decided-nonmatch majority to the dominant checkpoint is pure dead
-    # I/O at any scale, so the stage filters to the live rows BEFORE the
-    # write and counts the full pair mass in the same job via Observation
-    # (no second pass; the counts land in lineage so resume recovers them).
+    # undecided rows (the JW slice) — 0.2% of the mass on sparse-entity
+    # corpora (perfbench pair_heavy), about half on dense shared-entity
+    # cliques (0.44 on the sample corpus at scale 0.002). Writing the
+    # decided-nonmatch rows to the dominant checkpoint is dead I/O, so the
+    # stage filters to the live rows BEFORE the write and counts the full
+    # pair mass in the same job via Observation (no second pass; the
+    # counts land in lineage so resume recovers them).
     # Consumers needing the complete candidate-pair key set (the F1 audit)
     # use result["pairs_all"] — the unmaterialized pair plan — instead of
     # the scored checkpoint.
@@ -665,7 +666,12 @@ def main() -> None:
         "f1_eval_seconds": round(eval_wall, 2),
         **({"blocking_recall": recall_report} if recall_report is not None else {}),
         **scores,
-        "stages": {k: {kk: v[kk] for kk in ("rows", "wall_seconds", "stage_wall_seconds", "resumed", "count", "band_keys", "token_keys", "iterations", "converged", "unconverged_labels", "fused", "pairs_full", "undecided_rows", "shared_rows") if isinstance(v, dict) and kk in v} for k, v in result["metrics"].items()},
+        # every scalar of every metrics entry; nested values (params,
+        # per-partition rows) stay in the lineage sidecars
+        "stages": {
+            k: {kk: vv for kk, vv in v.items() if vv is None or isinstance(vv, (bool, int, float, str))}
+            for k, v in result["metrics"].items()
+        },
     }
     print(json.dumps(report))
     spark.stop()

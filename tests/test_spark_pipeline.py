@@ -270,11 +270,12 @@ def test_star_edges_cluster_parity(spark, transcripts, tmp_path):
     transitive closure. Non-vacuous: the corpus must contain multi-member
     groups (real sparsification) and similarity-only edges must survive."""
     from pilsner_spark.operators.clustering import cluster_turns
-    from pilsner_spark.operators.scoring import match_edges
+    from pilsner_spark.operators.scoring import split_match_edges
 
     result = run_er_pipeline(spark, str(tmp_path / "work"), transcripts)
-    turns = result["pipeline"].catalog.read("turns_normalized")
-    pairwise_edges = match_edges(result["scored"])
+    catalog = result["pipeline"].catalog
+    turns = catalog.read("turns_normalized")
+    pairwise_edges = split_match_edges(catalog.read("scored_pairs"), catalog.read("jw_scores"))
     star_clusters = {(r.turn_key, r.cluster_id) for r in result["clusters"].collect()}
     pairwise_clusters = {
         (r.turn_key, r.cluster_id)
@@ -361,44 +362,34 @@ def test_er_pipeline_hard_negatives_earn_f1(spark, tmp_path):
     assert hardneg.count() > 0
 
 
-def test_split_plan_matches_single_pass_scorer(spark, model, transcripts, tmp_path):
-    """The split scored plan (base + undecided-slice JW + join-back) must
-    produce row-for-row the same scored table and the same match edges as
-    the single-pass score_pairs — on the sample corpus, whose ambiguous
-    surfaces exercise shared-entity, conflict-veto AND similarity paths."""
-    from pilsner_spark.operators.mentions import extract_mentions_df
-    from pilsner_spark.operators.scoring import (
-        finalize_scored,
-        jw_scores_for_undecided,
-        match_edges,
-        score_pairs,
-        score_pairs_base,
-        split_match_edges,
-        turn_features,
-    )
-    from pilsner_spark.sources.synth import pipeline_input
+def test_er_clusters_query_matches_duckdb_oracle(spark, tmp_path):
+    """The driver-checked ER query (run_er_pipeline over the planted
+    documents corpus) gives exactly the rows of its analytic DuckDB
+    oracle, and leaves no pipeline workdir behind."""
+    import glob
+    import tempfile
 
-    turns = with_turn_key(normalized_text_df(pipeline_input(transcripts), model))
-    blocks, _ = salt_oversized_blocks(token_blocks(turns), 400, 16)
-    pairs = candidate_pairs(blocks, dedupe=False)
-    feats = turn_features(turns, with_turn_key(turn_entities_df(extract_mentions_df(transcripts, model))))
-    # materialize like the pipeline does (the split reads base from parquet)
-    base_path = str(tmp_path / "base")
-    score_pairs_base(pairs, feats, broadcast_features=True).write.parquet(base_path)
-    base = spark.read.parquet(base_path)
-    jw = jw_scores_for_undecided(base, feats, broadcast_features=True).localCheckpoint()
-    assert jw.count() > 0, "corpus must exercise the undecided slice"
+    import duckdb
+    import pandas as pd
 
-    split = finalize_scored(base, jw)
-    single = score_pairs(pairs, feats, broadcast_features=True)
-    cols = ["key_a", "key_b", "shared_entity", "conflicting_entities", "jaccard", "lev_ratio", "jw", "is_match"]
-    a = sorted(map(tuple, split.select(*cols).collect()))
-    b = sorted(map(tuple, single.select(*cols).collect()))
-    assert a == b
+    import __spark_entry__ as entry
 
-    e_split = sorted(map(tuple, split_match_edges(base, jw).collect()))
-    e_single = sorted(map(tuple, match_edges(single).collect()))
-    assert e_split == e_single and len(e_split) > 0
+    pd.DataFrame(
+        {"doc_id": range(150), "text": [f"document {i} of the planted corpus" for i in range(150)]}
+    ).to_parquet(tmp_path / "documents.parquet")
+    before = set(glob.glob(os.path.join(tempfile.gettempdir(), "er_clusters_*")))
+    got = entry.q_er_clusters(spark, str(tmp_path)).toPandas()
+    assert set(glob.glob(os.path.join(tempfile.gettempdir(), "er_clusters_*"))) == before
+
+    con = duckdb.connect()
+    con.execute(f"create view documents as select * from '{tmp_path / 'documents.parquet'}'")
+    want = con.execute(entry.oracle_sql()["er_clusters"]).df()
+
+    def rows(df):
+        return sorted(map(tuple, df[sorted(df.columns)].astype(str).values.tolist()))
+
+    assert rows(got) == rows(want)
+    assert len(want) == 4  # the four analytic components
 
 
 def test_pipeline_resume(spark, transcripts, tmp_path):
@@ -480,11 +471,16 @@ def test_lineage_recorded(spark, transcripts, tmp_path):
 
 
 def test_score_pairs_broadcast_and_shuffle_paths_agree(spark):
-    """The broadcast path (norm_text fetched for undecided rows via masked
-    broadcast joins — no driver collect) and the shuffle path (norm columns
-    joined per pair) must produce identical scores — including JW/lev on
-    undecided near-duplicate pairs."""
-    from pilsner_spark.operators.scoring import score_pairs, turn_features
+    """The split scorer (set features -> undecided-slice JW/lev ->
+    join-back) must produce identical scores with broadcast feature joins
+    and with shuffle joins — including JW/lev on undecided near-duplicate
+    pairs."""
+    from pilsner_spark.operators.scoring import (
+        finalize_scored,
+        jw_scores_for_undecided,
+        score_pairs_base,
+        turn_features,
+    )
 
     rows = [
         ("c1#0", "alpha beta gamma delta epsilon"),
@@ -500,14 +496,13 @@ def test_score_pairs_broadcast_and_shuffle_paths_agree(spark):
     pairs = spark.createDataFrame(
         [("c1#0", "c2#0"), ("c1#0", "c3#0"), ("c1#0", "c4#0")], "key_a string, key_b string"
     )
-    out_b = {
-        (r["key_a"], r["key_b"]): r
-        for r in score_pairs(pairs, feats, broadcast_features=True).collect()
-    }
-    out_s = {
-        (r["key_a"], r["key_b"]): r
-        for r in score_pairs(pairs, feats, broadcast_features=False).collect()
-    }
+
+    def scored(broadcast: bool) -> dict:
+        base = score_pairs_base(pairs, feats, broadcast_features=broadcast)
+        jw = jw_scores_for_undecided(base, feats, broadcast_features=broadcast)
+        return {(r["key_a"], r["key_b"]): r for r in finalize_scored(base, jw).collect()}
+
+    out_b, out_s = scored(True), scored(False)
     assert set(out_b) == set(out_s) == {("c1#0", "c2#0"), ("c1#0", "c3#0"), ("c1#0", "c4#0")}
     for k in out_b:
         for col in ("shared_entity", "jaccard", "lev_ratio", "jw", "is_match"):
@@ -520,14 +515,25 @@ def test_score_pairs_broadcast_and_shuffle_paths_agree(spark):
 
 
 def test_match_edges_dedupes_duplicate_pairs(spark):
-    from pilsner_spark.operators.scoring import match_edges
+    """candidate_pairs(dedupe=False) repeats pairs that share several block
+    keys; split_match_edges must emit each matched pair once, from both the
+    shared-entity rows and the similarity slice, and drop vetoed rows."""
+    from pilsner_spark.operators.scoring import split_match_edges
 
-    scored = spark.createDataFrame(
-        [("a", "b", True), ("a", "b", True), ("a", "c", False)],
-        "key_a string, key_b string, is_match boolean",
+    base = spark.createDataFrame(
+        [("a", "b", True), ("a", "b", True), ("a", "c", False), ("a", "d", False)],
+        "key_a string, key_b string, shared_entity boolean",
     )
-    edges = match_edges(scored).collect()
-    assert [(r["key_a"], r["key_b"]) for r in edges] == [("a", "b")]
+    jw = spark.createDataFrame(
+        [
+            ("a", "d", False, 0.8, 0.95),
+            ("a", "d", False, 0.8, 0.95),
+            ("a", "e", True, 0.9, 0.99),  # conflicting entities veto the match
+        ],
+        "key_a string, key_b string, conflicting_entities boolean, jaccard double, jw double",
+    )
+    edges = split_match_edges(base, jw).collect()
+    assert sorted((r["key_a"], r["key_b"]) for r in edges) == [("a", "b"), ("a", "d")]
 
 
 def test_candidate_pairs_dedupe_flag(spark):

@@ -129,39 +129,27 @@ def test_bpe_token_count_rollup(spark):
     assert (got[3].n_words, got[3].n_bpe_tokens) == (0, 0)
 
 
-def test_bpe_local_and_distributed_modes_agree(spark):
-    """The scale fix (VERDICT r4 perf item): mode='local' (collect the
-    O(vocab) word table, exact sequential loop driver-side) must be
-    BIT-IDENTICAL to mode='distributed' (per-merge hash-agg jobs) —
-    including pair_count values, early stop, and tie-breaks — on a corpus
-    with chained merges, ties, and cross-word symbol reuse."""
-    rows = []
-    i = 0
-    for w, n in [
-        ("low", 5), ("lower", 2), ("newest", 6), ("widest", 3),
-        ("lowlow", 4), ("aaa", 7), ("aab", 7), ("banana", 5), ("bandana", 2),
-    ]:
-        for _ in range(n):
-            rows.append((i, w))
-            i += 1
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    local = [
-        tuple(r) for r in learn_bpe_merges(docs, n_merges=25, mode="local").orderBy("rank").collect()
+def test_bpe_chained_merges_match_reference(spark):
+    """The driver-side merge loop must be BIT-IDENTICAL to the pure-Python
+    subword-nmt reference — including pair_count values, early stop, and
+    tie-breaks — on a corpus with chained merges, ties, and cross-word
+    symbol reuse ('aaa' exercises the no-re-merge-in-one-pass rule)."""
+    vocab = {
+        "low": 5, "lower": 2, "newest": 6, "widest": 3,
+        "lowlow": 4, "aaa": 7, "aab": 7, "banana": 5, "bandana": 2,
+    }
+    rows = [w for w, n in vocab.items() for _ in range(n)]
+    docs = spark.createDataFrame(list(enumerate(rows)), "doc_id long, text string")
+    got = [
+        (r.left, r.right, r.merged, r.pair_count)
+        for r in learn_bpe_merges(docs, n_merges=25).orderBy("rank").collect()
     ]
-    dist = [
-        tuple(r)
-        for r in learn_bpe_merges(docs, n_merges=25, mode="distributed").orderBy("rank").collect()
-    ]
-    assert local == dist
-    assert len(local) > 10  # the corpus genuinely sustains a deep merge chain
-    import pytest
-
-    with pytest.raises(ValueError, match="mode"):
-        learn_bpe_merges(docs, n_merges=2, mode="batched")
+    assert got == ref_learn(vocab, 25)
+    assert len(got) > 10  # the corpus genuinely sustains a deep merge chain
 
 
 def test_bpe_local_mode_job_count_is_flat(spark):
-    """mode='local' must not scale Spark jobs with n_merges: 60 merges
+    """Training must not scale Spark jobs with n_merges: 60 merges
     cost the word-count agg + collect only (VERDICT r4: the r4 shape was
     one job barrier PER merge — 32k barriers at a real vocabulary)."""
     docs = spark.createDataFrame(
@@ -170,7 +158,7 @@ def test_bpe_local_mode_job_count_is_flat(spark):
     sc = spark.sparkContext
     sc.setJobGroup("bpe-local-jobcount", "bpe local mode job count")
     try:
-        merges = learn_bpe_merges(docs, n_merges=60, min_pair_count=1, mode="local").collect()
+        merges = learn_bpe_merges(docs, n_merges=60, min_pair_count=1).collect()
     finally:
         sc.setJobGroup(None, None)
     assert len(merges) >= 15  # the corpus merges to whole words, well past any per-merge job shape
