@@ -1637,7 +1637,7 @@ def oracle_sql() -> dict[str, str]:
         ),
         # reachability closure (recursive CTE): min over the reachable set
         # == the connected component's min id, so this re-derives the
-        # Spark-side CC result without modeling the hash-to-min iteration
+        # Spark-side CC result without modeling either CC path
         "dedup_minhash_groups": _MINHASH_CTE.replace("with toks as", "with recursive toks as", 1)
         + (
             ", ok_bands as (select band_key from bands group by band_key having count(distinct doc_id) <= 200)"

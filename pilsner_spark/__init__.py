@@ -6,7 +6,8 @@ Spark-first record-linkage pipeline: text normalization (vectorized Arrow
 UDFs) -> dictionary mention extraction (broadcast automaton inside
 mapInPandas) -> blocking (MinHash bands x (tool, role), salted) -> pairwise
 scoring (Jaro-Winkler / Levenshtein / dictionary hits) -> transitive
-clustering (iterative hash-to-min connected components), with per-stage
+clustering (connected components: one Arrow task below 2M edges,
+iterative hash-to-min above), with per-stage
 checkpoints, lineage and metrics.
 
 Layout:

@@ -23,7 +23,7 @@ shared-entity cliques); ``finalize_scored`` rebuilds the per-pair view.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from pilsner_spark.functions.similarity import (
@@ -178,7 +178,7 @@ def split_match_edges(
 def star_shared_edges(blocks: DataFrame, turn_entities: DataFrame) -> DataFrame:
     """Connectivity-equivalent sparsification of the shared-entity match
     edges: per (block key, entity) group, connect every member turn to the
-    group's MINIMUM turn instead of to every other member.
+    group's MINIMUM turn (the hub) instead of to every other member.
 
     Why it's exact: a shared-entity match edge exists iff two turns share a
     block AND an entity (``shared_entity`` over candidate pairs) — i.e.
@@ -192,15 +192,22 @@ def star_shared_edges(blocks: DataFrame, turn_entities: DataFrame) -> DataFrame:
     the clustering stage was materializing it), the star is LINEAR in block
     membership rows — the same clique-to-linear move the dedup family makes
     with bucketed pair expansion. Pass the SAME salted block view candidate
-    pairs were built from, so edge scope matches pair scope exactly."""
-    ent = turn_entities.select("turn_key", F.explode("mention_entities").alias("entity"))
-    membership = blocks.join(ent, "turn_key").select("block_key", "entity", "turn_key")
-    hubs = membership.groupBy("block_key", "entity").agg(F.min("turn_key").alias("hub"))
+    pairs were built from, so edge scope matches pair scope exactly.
+
+    Plan shape: the per-turn entity sets join onto the block rows (a
+    broadcast hash join when the caller hints ``turn_entities``, which is
+    O(turns)), and the hub is a window min over (block, entity) — ONE
+    shuffle, no aggregate joined back. The result is a multiset: a
+    (hub, member) edge repeats once per block the two turns share. Nothing
+    dedups it, because connected components neither needs an edge set nor
+    pays for repeats (``operators/clustering.connected_components``)."""
+    group = Window.partitionBy("block_key", "entity")
     return (
-        membership.join(hubs, ["block_key", "entity"])
+        blocks.join(turn_entities.select("turn_key", "mention_entities"), "turn_key")
+        .select("block_key", "turn_key", F.explode("mention_entities").alias("entity"))
+        .withColumn("hub", F.min("turn_key").over(group))
         .filter(F.col("turn_key") != F.col("hub"))
         .select(F.col("hub").alias("key_a"), F.col("turn_key").alias("key_b"))
-        .distinct()
     )
 
 
@@ -211,12 +218,13 @@ def star_match_edges(
     jw_threshold: float = 0.92,
     jaccard_threshold: float = 0.6,
 ) -> DataFrame:
-    """Full match-edge set for clustering, with the shared-entity component
-    sparsified to stars (``star_shared_edges``) and the similarity
-    component taken pairwise from the tiny jw slice — same components as
-    ``split_match_edges``, linear edge mass."""
+    """Full match-edge multiset for clustering, with the shared-entity
+    component sparsified to stars (``star_shared_edges``) and the
+    similarity component taken pairwise from the tiny jw slice — same
+    components as ``split_match_edges``, linear edge mass, and no dedup
+    shuffle (see ``star_shared_edges``)."""
     sim = jw_scores.filter(similarity_match(jw_threshold, jaccard_threshold)).select("key_a", "key_b")
-    return star_shared_edges(blocks, turn_entities).unionByName(sim).distinct()
+    return star_shared_edges(blocks, turn_entities).unionByName(sim)
 
 
 def finalize_scored(

@@ -306,9 +306,10 @@ def run_er_pipeline(
 
     def build_edges() -> DataFrame:
         if use_star:
-            return star_match_edges(
-                blocks, mention_entities, jw_slice, jw_threshold, jaccard_threshold
-            )
+            # the per-turn entity table is O(turns): same gate as the
+            # feature joins, so the membership join ships no block rows
+            ents = F.broadcast(mention_entities) if bcast_feats else mention_entities
+            return star_match_edges(blocks, ents, jw_slice, jw_threshold, jaccard_threshold)
         return split_match_edges(scored_base, jw_slice, jw_threshold, jaccard_threshold)
 
     clusters = pipe.stage(
@@ -317,8 +318,12 @@ def run_er_pipeline(
         params={"cluster_edges": "star-v1" if use_star else "pairwise-v1"},
     )
     pipe.metrics["cluster_edge_source"] = {"star": use_star, "shared_rows": n_shared, "block_rows": n_blocks}
-    if cc_stats:  # empty when the stage was resumed from checkpoint
+    # convergence is known only when CC ran; lineage keeps it for resumes
+    if not pipe.metrics["entity_clusters"].get("resumed"):
+        pipe.catalog.amend_lineage("entity_clusters", {"convergence": dict(cc_stats)})
         pipe.metrics["clustering_convergence"] = dict(cc_stats)
+    else:
+        pipe.metrics["clustering_convergence"] = pipe.metrics["entity_clusters"].get("convergence", {})
     # pairs_all: the complete candidate-pair key set, for consumers that
     # need every pair rather than the live scored rows (the F1 audit's
     # labeled-pair denominator). Fused -> the lazy self-join plan (recomputed
@@ -639,9 +644,13 @@ def main() -> None:
     # and is timed separately (it is a verification pass, not a stage).
     sp_metrics = result["metrics"]["scored_pairs"]
     n_pairs = int(sp_metrics.get("pairs_full", sp_metrics["rows"]))
+    # a resumed stage did none of its work in this window: no throughput
+    resumed = [k for k, v in result["metrics"].items() if isinstance(v, dict) and v.get("resumed")]
     eval_start = time.time()
-    scores, recall_report = {}, None
+    scores, recall_report, distinct = {}, None, {}
     if not args.skip_eval:
+        # scored rows count a pair once per block key it shares
+        distinct = {"distinct_pairs": result["pairs_all"].distinct().count()}
         scores = evaluate_f1(result["pairs_all"], result["clusters"], transcripts)
         scores["bcubed"] = {
             "scoped": bcubed(result["clusters"], transcripts, scope_cols=("tool", "role")),
@@ -661,8 +670,10 @@ def main() -> None:
         "n_convs": n_convs,
         "n_turns": int(result["metrics"]["turns_normalized"]["rows"]),
         "pairs_scored": n_pairs,
+        **distinct,
         "wall_seconds": round(wall, 2),
-        "pairs_per_second": round(n_pairs / wall, 1),
+        "pairs_per_second": None if resumed else round(n_pairs / wall, 1),
+        "resumed_stages": resumed,
         "f1_eval_seconds": round(eval_wall, 2),
         **({"blocking_recall": recall_report} if recall_report is not None else {}),
         **scores,

@@ -80,8 +80,8 @@ def incremental_cluster_assignments(
     Per micro-batch: extract mentions -> bipartite edges (turn_key,
     'E#'+entity) -> map every endpoint already assigned a cluster to its
     CLUSTER ID (connectivity through history is fully summarized by
-    membership, so the old edges never need re-reading) -> run hash-to-min
-    CC on that mini-graph only (O(batch) vertices: fresh keys + touched
+    membership, so the old edges never need re-reading) -> run connected
+    components on that mini-graph only (O(batch) vertices: fresh keys + touched
     cluster representatives). Because a cluster id IS the lexicographic-min
     member key, the mini-CC label (min over old cids + fresh keys) equals
     the global min of the merged component — identical output to a full

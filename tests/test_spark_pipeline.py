@@ -154,10 +154,14 @@ def test_connected_components(spark):
     assert out["a"] == comp["a"] and out["q"] is not None
 
 
-def test_connected_components_unconverged_flag(spark):
+def test_connected_components_unconverged_flag(spark, monkeypatch):
     """A 30-vertex path graph cannot converge in max_iter=5 hash-to-min
     rounds: the stats dict must surface the non-convergence instead of
-    silently returning split clusters (no-silent-truncation)."""
+    silently returning split clusters (no-silent-truncation). Runs the
+    Spark path: the graph is far below the local-finish bound."""
+    from pilsner_spark.operators import clustering
+
+    monkeypatch.setattr(clustering, "LOCAL_EDGE_LIMIT", 0)
     keys = [f"v{i:02d}" for i in range(30)]
     edges = spark.createDataFrame(
         list(zip(keys, keys[1:])), "key_a string, key_b string"
@@ -173,6 +177,66 @@ def test_connected_components_unconverged_flag(spark):
     assert stats2["converged"] is True
     assert stats2["unconverged_labels"] == 0
     assert len({r.cluster_id for r in comp}) == 1
+
+
+def _random_graph_rows(seed, key):
+    """Seeded random edge list over 300 vertices: sparse enough for many
+    components, with duplicate edges (both orientations), self-loops and
+    edges to a null endpoint (which join nothing)."""
+    import random
+
+    rng = random.Random(seed)
+    edges = [(rng.randrange(300), rng.randrange(300)) for _ in range(220)]
+    edges += edges[:40] + [(b, a) for a, b in edges[40:70]] + [(v, v) for v in rng.sample(range(300), 15)]
+    edges += [(None, v) for v in rng.sample(range(300), 3)] + [(rng.randrange(300), None)]
+    rng.shuffle(edges)
+    return [(None if a is None else key(a), None if b is None else key(b)) for a, b in edges]
+
+
+@pytest.mark.parametrize(
+    "key,sql_type",
+    [(lambda v: f"t{v}", "string"), (lambda v: v, "bigint")],
+    ids=["string", "long"],
+)
+def test_connected_components_local_matches_spark_path(spark, monkeypatch, key, sql_type):
+    """The one-task Arrow kernel and the hash-to-min loop return the same
+    table, ids included, on seeded random graphs. Long keys pin numeric
+    order (9 < 10 < 100, where a string sort would pick 10 over 9); the
+    output keeps the input key type."""
+    from collections import Counter
+
+    from pilsner_spark.operators import clustering
+
+    ddl = f"key_a {sql_type}, key_b {sql_type}"
+    for seed in (1, 2, 3):
+        edges = spark.createDataFrame(_random_graph_rows(seed, key), ddl)
+        local_stats, spark_stats = {}, {}
+        local = connected_components(edges, stats=local_stats)
+        assert local.schema.simpleString() == f"struct<turn_key:{sql_type},cluster_id:{sql_type}>"
+        local_rows = Counter(tuple(r) for r in local.collect())
+        monkeypatch.setattr(clustering, "LOCAL_EDGE_LIMIT", 0)
+        spark_rows = Counter(tuple(r) for r in connected_components(edges, stats=spark_stats).collect())
+        monkeypatch.undo()
+        assert local_rows == spark_rows
+        assert (None, None) in local_rows and len({c for _, c in local_rows}) > 2
+        assert local_stats == {"iterations": 0, "converged": True, "unconverged_labels": 0, "edge_rows": 309}
+        assert spark_stats["converged"] is True and spark_stats["iterations"] > 0
+        assert spark_stats["edge_rows"] == 309
+    if sql_type == "bigint":
+        nums = spark.createDataFrame([(100, 10), (10, 9), (7, 70)], ddl)
+        got = {r.turn_key: r.cluster_id for r in connected_components(nums).collect()}
+        assert got == {9: 9, 10: 9, 100: 9, 7: 7, 70: 7}
+
+
+def test_connected_components_local_path_converges_on_long_chain(spark):
+    """A 60-vertex path needs far more than max_iter=5 hash-to-min rounds;
+    the local finish labels it in one task regardless."""
+    keys = [f"v{i:02d}" for i in range(60)]
+    edges = spark.createDataFrame(list(zip(keys, keys[1:])), "key_a string, key_b string")
+    stats = {}
+    comp = connected_components(edges, max_iter=5, stats=stats).collect()
+    assert stats == {"iterations": 0, "converged": True, "unconverged_labels": 0, "edge_rows": 59}
+    assert len(comp) == 60 and {r.cluster_id for r in comp} == {"v00"}
 
 
 def test_bcubed_hand_computed(spark):
@@ -289,7 +353,8 @@ def test_star_edges_cluster_parity(spark, transcripts, tmp_path):
 
     mentions = result["pipeline"].catalog.read("mentions")
     ents = _wtk(turn_entities_df(mentions))
-    n_star = star_shared_edges(result["blocks_salted"], ents).count()
+    # star edges are a multiset (one row per shared block); count the set
+    n_star = star_shared_edges(result["blocks_salted"], ents).distinct().count()
     n_pairwise = pairwise_edges.count()
     assert 0 < n_star < n_pairwise / 2
 
@@ -404,6 +469,9 @@ def test_pipeline_resume(spark, transcripts, tmp_path):
     r2 = run_er_pipeline(spark, work, transcripts, fuse_pairs=False)
     resumed = [k for k, m in r2["metrics"].items() if isinstance(m, dict) and m.get("resumed")]
     assert set(resumed) >= {"turns_normalized", "mentions", "blocks", "candidate_pairs", "scored_pairs", "entity_clusters"}
+    # CC convergence comes back from lineage, not as an empty dict
+    assert r1["metrics"]["clustering_convergence"]["converged"] is True
+    assert r2["metrics"]["clustering_convergence"] == r1["metrics"]["clustering_convergence"]
     # param change -> stages recompute
     r3 = run_er_pipeline(spark, work, transcripts, jw_threshold=0.95, fuse_pairs=False)
     assert not r3["metrics"]["scored_pairs"].get("resumed")

@@ -351,6 +351,32 @@ CHECKS = {
             ("no row-at-a-time Python", r"BatchEvalPython"),
         ],
     },
+    # star match edges: per-turn entity sets broadcast onto the block rows,
+    # then the hub as a window min over (block, entity) — the only shuffle;
+    # no aggregate joined back, no dedup shuffle
+    "er_star_edges": {
+        "want": [
+            ("membership join broadcast", r"BroadcastHashJoin"),
+            ("hub is a window min over (block, entity)", r"windowspecdefinition\(block_key"),
+        ],
+        "avoid": [
+            ("at most one hash shuffle", r"Arguments: hashpartitioning[\s\S]*Arguments: hashpartitioning"),
+            ("no sort-merge join", r"SortMergeJoin"),
+            ("no Python nodes", r"EvalPython|MapInPandas|MapInArrow"),
+        ],
+    },
+    # CC local finish: the checkpointed edges coalesce into ONE task that
+    # runs the Arrow union-find kernel; no per-row Python, no shuffle
+    "er_cc_local": {
+        "want": [
+            ("Arrow-batched kernel", r"MapInArrow"),
+            ("fed by a single-partition coalesce", r"^\(\d+\) Coalesce\nInput[^\n]*\nArguments: 1$"),
+        ],
+        "avoid": [
+            ("no row-at-a-time Python", r"BatchEvalPython"),
+            ("no shuffle", r"Exchange"),
+        ],
+    },
 }
 
 
@@ -358,14 +384,22 @@ def _split_stage_dfs(spark):
     """Materialized inputs for the split-plan audits (built once)."""
     import tempfile
 
+    from pyspark.sql import functions as F
+
     from pilsner_spark.operators.blocking import (
         candidate_pairs,
         salt_oversized_blocks,
         token_blocks,
         with_turn_key,
     )
+    from pilsner_spark.operators.clustering import connected_components
     from pilsner_spark.operators.mentions import extract_mentions_df, normalized_text_df, turn_entities_df
-    from pilsner_spark.operators.scoring import jw_scores_for_undecided, score_pairs_base, turn_features
+    from pilsner_spark.operators.scoring import (
+        jw_scores_for_undecided,
+        score_pairs_base,
+        star_match_edges,
+        turn_features,
+    )
     from pilsner_spark.sources.sample_dictionary import build_sample_model
     from pilsner_spark.sources.synth import pipeline_input, synth_transcripts
 
@@ -376,7 +410,10 @@ def _split_stage_dfs(spark):
     tmp = tempfile.mkdtemp(prefix="plan_audit_split_")
     blocks.write.mode("overwrite").parquet(f"{tmp}/blocks")
     candidate_pairs(blocks, dedupe=False).write.mode("overwrite").parquet(f"{tmp}/pairs")
-    feats = turn_features(turns, with_turn_key(turn_entities_df(extract_mentions_df(tr, model))))
+    ents = with_turn_key(turn_entities_df(extract_mentions_df(tr, model)))
+    ents.write.mode("overwrite").parquet(f"{tmp}/ents")
+    ents_ck = spark.read.parquet(f"{tmp}/ents")
+    feats = turn_features(turns, ents_ck)
     feats.write.mode("overwrite").parquet(f"{tmp}/feats")
     feats_ck = spark.read.parquet(f"{tmp}/feats")
     base = score_pairs_base(spark.read.parquet(f"{tmp}/pairs"), feats_ck, broadcast_features=True)
@@ -391,10 +428,21 @@ def _split_stage_dfs(spark):
         dedupe=False,
         spread_to=8,
     )
+    jw_slice = jw_scores_for_undecided(base_ck, feats_ck, broadcast_features=True)
+    jw_slice.write.mode("overwrite").parquet(f"{tmp}/jw")
+    # the pipeline's star-edge call: entity table broadcast under its
+    # per-turn row gate, blocks and jw slice off their checkpoints
+    star = star_match_edges(
+        spark.read.parquet(f"{tmp}/blocks"), F.broadcast(ents_ck), spark.read.parquet(f"{tmp}/jw")
+    )
     return {
+        "er_star_edges": star,
+        # connected_components materializes the edges (one eager job) and
+        # returns the lazy local-finish plan over that checkpoint
+        "er_cc_local": connected_components(star),
         "er_scored_base": base,
         "er_scored_fused": score_pairs_base(fused_pairs, feats_ck, broadcast_features=True),
-        "er_jw_slice": jw_scores_for_undecided(base_ck, feats_ck, broadcast_features=True),
+        "er_jw_slice": jw_slice,
     }
 
 
@@ -508,6 +556,8 @@ BUILDERS = {
     "er_scored_base": _split("er_scored_base"),
     "er_scored_fused": _split("er_scored_fused"),
     "er_jw_slice": _split("er_jw_slice"),
+    "er_star_edges": _split("er_star_edges"),
+    "er_cc_local": _split("er_cc_local"),
 }
 
 
