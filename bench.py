@@ -196,8 +196,7 @@ def main() -> None:
     # pair count from stage lineage/Observation — counting result["scored"]
     # here would charge the timed window one checkpoint re-read the pipeline
     # CLI does not charge (plans/pipeline.py main does the same)
-    sp_metrics = result["metrics"]["scored_pairs"]
-    n_pairs = int(sp_metrics.get("pairs_full", sp_metrics["rows"]))
+    n_pairs = int(result["metrics"]["scored_pairs"]["pairs_full"])
     f1 = evaluate_f1(result["pairs_all"], result["clusters"], transcripts)
     timings["er_pipeline"] = er_wall
     shutil.rmtree(workdir, ignore_errors=True)

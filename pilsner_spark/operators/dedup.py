@@ -18,22 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pilsner_spark.functions.text import md5_long, tokens
-
-
-def _spread_input(df: DataFrame) -> DataFrame:
-    """Text tables compress so well that a byte-budget scan of one small
-    parquet file yields a single partition, serializing every expression-
-    heavy operator downstream (a 5k-doc signature computation measured 12s
-    on one core vs <2s spread). Repartitioning costs one narrow shuffle of
-    the raw rows — always cheaper than losing all parallelism. Streaming
-    DataFrames pass through untouched (micro-batch sizing is the streaming
-    engine's job, and ``df.rdd`` is illegal on a streaming plan)."""
-    if df.isStreaming:
-        return df
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
+from pilsner_spark.session import spread_input
 
 
 def exact_dedup_groups(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -84,7 +69,7 @@ def minhash_bands(
     candidates. band_key folds band index + the band's minhashes."""
     sig = minhash_signature(F.col(text_col), num_hashes, shingle_n, seed)
     n_bands = num_hashes // band_size
-    with_sig = _spread_input(df).select(F.col(id_col).alias("doc_id"), sig.alias("sig"))
+    with_sig = spread_input(df).select(F.col(id_col).alias("doc_id"), sig.alias("sig"))
     bands = [
         F.concat_ws(
             "#",
@@ -209,7 +194,7 @@ def simhash_candidate_pairs(
     chunk and the cap bounds the degenerate ones)."""
     chunk_bits = bits // n_chunks
     mask = (1 << chunk_bits) - 1
-    sig = _spread_input(df).select(
+    sig = spread_input(df).select(
         F.col(id_col).alias("doc_id"), simhash(F.col(text_col), bits=bits, seed=seed).alias("sh")
     )
     chunks = sig.select(
@@ -261,7 +246,7 @@ def ngram_jaccard_pairs(
     higher-order pair expansion computes the shingle pipeline once and
     shuffles it once (a shingle self-join would do both twice); bucket
     pair counts are bounded by max_shingle_df^2."""
-    sh = _spread_input(df).select(
+    sh = spread_input(df).select(
         F.col(id_col).alias("doc_id"),
         F.explode(F.array_distinct(shingles(F.col(text_col), shingle_n))).alias("shingle"),
     )

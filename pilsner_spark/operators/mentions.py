@@ -23,6 +23,7 @@ from pyspark.sql import types as T
 from pilsner_spark.core.model import CompiledModel
 from pilsner_spark.core.normalize import normalize_with_map
 from pilsner_spark.core.parse import extract_mentions
+from pilsner_spark.session import spread_input
 
 MENTION_SCHEMA = T.StructType(
     [
@@ -44,7 +45,6 @@ def extract_mentions_df(
     attrs_where: Optional[dict] = None,
     text_col: str = "text",
     passthrough_cols: tuple = (),
-    spread: bool = True,
     n_matcher_shards: Optional[int] = None,
     progress=None,
 ) -> DataFrame:
@@ -61,21 +61,16 @@ def extract_mentions_df(
     another shard's match; on such overlaps the union scan keeps the
     reference's multi-trie behavior instead.
 
-    ``spread``: text compresses well, so a byte-budget scan of a small
-    parquet file often yields a single input partition while the Python
-    scan kernel costs far more per row than the repartition that unlocks
-    every core — spread the input to full parallelism when it arrives
-    narrower (same reasoning as session.py's scan budget, one level up).
+    The input is spread to full parallelism when it arrives narrower
+    (``session.spread_input``): the Python scan kernel costs far more per
+    row than the repartition that unlocks every core.
 
     ``progress``: a :class:`~pilsner_spark.operators.progress.ProgressReporter`
     — the kernel adds per-Arrow-batch row counts to its accumulator for
     throttled in-flight percent callbacks (Q12, utility.py:449-454).
     """
     spark = df.sparkSession
-    if spread and not df.isStreaming:  # streaming plans cannot be inspected/repartitioned this way
-        target = spark.sparkContext.defaultParallelism
-        if df.rdd.getNumPartitions() < target:
-            df = df.repartition(target)
+    df = spread_input(df)
     filtered = model.filtered_matchers(attrs_where)
     if filtered is not model.matchers:
         import copy
@@ -138,19 +133,14 @@ def normalized_text_df(
     unit: Optional[str] = None,
     text_col: str = "text",
     out_col: str = "norm_text",
-    spread: bool = True,
     progress=None,
 ) -> DataFrame:
     """Append the normalized form of ``text_col`` under one normalization
     unit (default: the model's default unit) — an Arrow-batched pandas UDF
-    over the pure normalization kernel. ``spread`` as in
-    ``extract_mentions_df``; ``progress`` as in ``extract_mentions_df``
-    (in-flight Q12 percent callbacks)."""
+    over the pure normalization kernel. Input spreading and ``progress``
+    as in ``extract_mentions_df`` (in-flight Q12 percent callbacks)."""
     spark = df.sparkSession
-    if spread and not df.isStreaming:  # streaming plans cannot be inspected/repartitioned this way
-        target = spark.sparkContext.defaultParallelism
-        if df.rdd.getNumPartitions() < target:
-            df = df.repartition(target)
+    df = spread_input(df)
     unit_name = unit or model.default_normalizer
     cfg = model.normalizers[unit_name]
     sep = model.word_separator

@@ -28,7 +28,8 @@ the pipeline a 100 TB pretraining-corpus build actually runs:
    - ``contaminated``: shares a word n-gram with the benchmark/eval set
      (text_filters.decontaminate — benchmark grams broadcast).
    Nothing is dropped silently: the ledger IS a checkpointed stage, and
-   per-reason counts land in the metrics dict.
+   its per-reason counts are a fact in its lineage, so a resume reports
+   them without recounting.
 3. ``corpus_filtered`` — anti-join the ledger, then threshold quality /
    repetition / length signals (reasons counted before the drop); with
    ``gopher_params`` set, the full Gopher rule verdict
@@ -236,7 +237,13 @@ def run_corpus_prep(
             out = out.join(gq, "doc_id")
         return out
 
-    stats = pipe.stage("doc_stats", build_stats)
+    stats = pipe.stage(
+        "doc_stats",
+        build_stats,
+        facts=lambda out: {
+            "gopher_rejected": out.filter(~F.col("gopher_keep")).count() if gopher_params is not None else None
+        },
+    )
 
     def build_drops() -> DataFrame:
         out = _exact_dup_drops(docs).unionByName(
@@ -257,8 +264,14 @@ def run_corpus_prep(
         # one ledger row per (doc, reason); a doc may carry several reasons
         return out.dropDuplicates(["doc_id", "reason"])
 
-    drops = pipe.stage("drops", build_drops)
-    reason_counts = {r["reason"]: r["n"] for r in drops.groupBy("reason").agg(F.count("*").alias("n")).collect()}
+    drops = pipe.stage(
+        "drops",
+        build_drops,
+        facts=lambda out: {
+            "reason_counts": {r["reason"]: r["n"] for r in out.groupBy("reason").agg(F.count("*").alias("n")).collect()}
+        },
+    )
+    reason_counts = pipe.metrics["drops"]["reason_counts"]
 
     def build_filtered() -> DataFrame:
         quality_ok = (
@@ -343,9 +356,6 @@ def run_corpus_prep(
     )
     n_filtered = pipe.metrics.get("corpus_filtered", {}).get("rows")
     n_selected = pipe.metrics.get("dsir_selected", {}).get("rows")
-    gopher_rejected = (
-        stats.filter(~F.col("gopher_keep")).count() if gopher_params is not None else None
-    )
     pipe.metrics["summary"] = {
         "n_input_docs": n_input,
         "drop_reasons": reason_counts,
@@ -353,7 +363,7 @@ def run_corpus_prep(
         "n_retained": n_filtered,
         "retention_rate": round(n_filtered / n_input, 6) if n_filtered is not None and n_input else None,
         "n_dsir_selected": n_selected,
-        "gopher_rejected": gopher_rejected,
+        "gopher_rejected": pipe.metrics["doc_stats"]["gopher_rejected"],
     }
     return {
         "packed": packed,

@@ -61,15 +61,24 @@ class Pipeline:
         self.params = params or {}
         self.metrics: Dict[str, dict] = {}
 
-    def stage(self, name: str, fn: Callable[[], DataFrame], params: Optional[dict] = None) -> DataFrame:
+    def stage(
+        self,
+        name: str,
+        fn: Callable[[], DataFrame],
+        params: Optional[dict] = None,
+        facts: Optional[Callable[[DataFrame], dict]] = None,
+    ) -> DataFrame:
         """Run or resume one stage: skip when a checkpoint with the same
-        params hash exists; otherwise compute, materialize, record lineage."""
+        params hash exists; otherwise compute, materialize, and commit the
+        lineage with ``facts`` merged in (``Catalog.write``). A resumed
+        stage gets its facts back from that lineage."""
         stage_params = {**self.params, **(params or {})}
-        if self.catalog.exists(name, stage_params):
-            self.metrics[name] = {**(self.catalog.lineage(name) or {}), "resumed": True}
+        lineage = self.catalog.exists(name, stage_params)
+        if lineage is not None:
+            self.metrics[name] = {**lineage, "resumed": True}
             return self.catalog.read(name)
         start = time.time()
-        lineage = self.catalog.write(fn(), name, stage_params)
+        lineage = self.catalog.write(fn(), name, stage_params, facts)
         lineage["stage_wall_seconds"] = round(time.time() - start, 3)
         lineage["resumed"] = False
         self.metrics[name] = lineage
@@ -167,32 +176,27 @@ def run_er_pipeline(
     # ~seconds write buys construction-once AND salting-once.
     raw_blocks = pipe.stage("blocks_raw", build_raw_blocks, params={"blocks_layout": "raw-v1"})
 
-    def build_salted() -> DataFrame:
-        salted, oversized = salt_oversized_blocks(raw_blocks, max_block_size, salt_buckets)
+    def salted_key_counts(_: DataFrame) -> dict:
         # one cheap aggregation over the raw checkpoint for the
         # no-silent-truncation report, split by key family so band-key skew
         # is visible separately from token skew. Band keys are
         # 'mh<band#>#<hash>#<tool>#<role>' (blocking.minhash_blocks); a
         # full-prefix match, not startswith('mh') — a corpus token beginning
         # with 'mh' (e.g. 'mhz') must not be miscounted as a band key.
+        oversized = salt_oversized_blocks(raw_blocks, max_block_size, salt_buckets)[1]
         counts = oversized.agg(
             F.count("*").alias("total"),
             F.sum(F.when(F.col("block_key").rlike("^mh[0-9]+#"), 1).otherwise(0)).alias("band"),
         ).collect()[0]
-        pipe.metrics["blocking_salted_keys"] = {
-            "count": int(counts["total"] or 0),
-            "band_keys": int(counts["band"] or 0),
-            "token_keys": int((counts["total"] or 0) - (counts["band"] or 0)),
-        }
-        return salted
+        total, band = int(counts["total"] or 0), int(counts["band"] or 0)
+        return {"salted_keys": {"count": total, "band_keys": band, "token_keys": total - band}}
 
-    blocks = pipe.stage("blocks", build_salted)
-    if not pipe.metrics["blocks"].get("resumed"):
-        pipe.catalog.amend_lineage("blocks", {"salted_keys": pipe.metrics["blocking_salted_keys"]})
-    else:
-        pipe.metrics["blocking_salted_keys"] = (pipe.metrics["blocks"] or {}).get(
-            "salted_keys", {}
-        )
+    blocks = pipe.stage(
+        "blocks",
+        lambda: salt_oversized_blocks(raw_blocks, max_block_size, salt_buckets)[0],
+        facts=salted_key_counts,
+    )
+    pipe.metrics["blocking_salted_keys"] = pipe.metrics["blocks"]["salted_keys"]
     # broadcast decisions from checkpoint lineage (no extra count jobs):
     # per-turn/per-block side tables are O(turns) while pairs are
     # O(block_size x turns) — broadcast keeps those joins shuffle-free
@@ -227,7 +231,7 @@ def run_er_pipeline(
     # unmaterialized self-join plan straight into score_pairs_base: one full
     # write+read of |pairs| rows disappears from the wall (measured 1.09x
     # median at 8c/203M pairs, the 36-41 s candidate_pairs stage eliminated
-    # while the scored stage stays in its noise band — tools/ab_fuse_pairs.py)
+    # while the scored stage stays in its noise band; interleaved A/B)
     # at the cost of resume granularity: a restart recomputes pairs inside
     # the scored stage, and the extra work is just the block self-join.
     # pairs_scored reporting is unaffected: it reads scored_pairs lineage.
@@ -248,34 +252,28 @@ def run_er_pipeline(
     # corpora (perfbench pair_heavy), about half on dense shared-entity
     # cliques (0.44 on the sample corpus at scale 0.002). Writing the
     # decided-nonmatch rows to the dominant checkpoint is dead I/O, so the
-    # stage filters to the live rows BEFORE the write and counts the full
-    # pair mass in the same job via Observation (no second pass; the
-    # counts land in lineage so resume recovers them).
+    # stage filters to the live rows BEFORE the write. Both layouts count
+    # the full pair mass in the same job via Observation (no second pass;
+    # the counts are stage facts, so resume recovers them).
     # Consumers needing the complete candidate-pair key set (the F1 audit)
     # use result["pairs_all"] — the unmaterialized pair plan — instead of
     # the scored checkpoint.
-    obs = Observation("scored_pairs_full") if compact_scored else None
+    obs = Observation("scored_pairs_full")
 
     def build_scored() -> DataFrame:
         base = score_pairs_base(
             pairs, features, jaccard_threshold, broadcast_features=bcast_feats
+        ).observe(
+            obs,
+            F.count(F.lit(1)).alias("pairs_full"),
+            F.sum(F.col("undecided").cast("long")).alias("undecided_rows"),
+            F.sum(F.col("shared_entity").cast("long")).alias("shared_rows"),
         )
-        if compact_scored:
-            counted = base.observe(
-                obs,
-                F.count(F.lit(1)).alias("pairs_full"),
-                F.sum(F.col("undecided").cast("long")).alias("undecided_rows"),
-                F.sum(F.col("shared_entity").cast("long")).alias("shared_rows"),
-            )
-            return counted.filter(F.col("shared_entity") | F.col("undecided"))
-        return base
+        return base.filter(F.col("shared_entity") | F.col("undecided")) if compact_scored else base
 
-    scored_base = pipe.stage("scored_pairs", build_scored)
-    if compact_scored and not pipe.metrics["scored_pairs"].get("resumed"):
-        got = obs.get
-        extra = {k: int(got[k] or 0) for k in ("pairs_full", "undecided_rows", "shared_rows")}
-        pipe.metrics["scored_pairs"].update(extra)
-        pipe.catalog.amend_lineage("scored_pairs", extra)
+    scored_base = pipe.stage(
+        "scored_pairs", build_scored, facts=lambda _: {k: int(v or 0) for k, v in obs.get.items()}
+    )
     jw_slice = pipe.stage(
         "jw_scores",
         lambda: jw_scores_for_undecided(scored_base, features, broadcast_features=bcast_feats),
@@ -301,8 +299,8 @@ def run_er_pipeline(
     #   shared-pair mass is. Right when cliques are dense (the sample
     #   corpus: 3.66M shared pairs from 0.43M block rows; at web scale a
     #   hot entity makes shared_rows explode while block rows stay linear).
-    n_shared = int((pipe.metrics.get("scored_pairs") or {}).get("shared_rows") or 0)
-    use_star = compact_scored and n_shared > n_blocks
+    n_shared = pipe.metrics["scored_pairs"]["shared_rows"]
+    use_star = n_shared > n_blocks
 
     def build_edges() -> DataFrame:
         if use_star:
@@ -316,14 +314,11 @@ def run_er_pipeline(
         "entity_clusters",
         lambda: cluster_turns(turns, build_edges(), stats=cc_stats),
         params={"cluster_edges": "star-v1" if use_star else "pairwise-v1"},
+        # convergence is known only when CC ran; lineage keeps it for resumes
+        facts=lambda _: {"convergence": dict(cc_stats)},
     )
     pipe.metrics["cluster_edge_source"] = {"star": use_star, "shared_rows": n_shared, "block_rows": n_blocks}
-    # convergence is known only when CC ran; lineage keeps it for resumes
-    if not pipe.metrics["entity_clusters"].get("resumed"):
-        pipe.catalog.amend_lineage("entity_clusters", {"convergence": dict(cc_stats)})
-        pipe.metrics["clustering_convergence"] = dict(cc_stats)
-    else:
-        pipe.metrics["clustering_convergence"] = pipe.metrics["entity_clusters"].get("convergence", {})
+    pipe.metrics["clustering_convergence"] = pipe.metrics["entity_clusters"]["convergence"]
     # pairs_all: the complete candidate-pair key set, for consumers that
     # need every pair rather than the live scored rows (the F1 audit's
     # labeled-pair denominator). Fused -> the lazy self-join plan (recomputed
@@ -526,13 +521,14 @@ def blocking_recall(
         "turn_key", "planted_entity", "tool", "role"
     )
 
-    def pair_total(group_cols) -> int:
-        sizes = t.groupBy(*group_cols).agg(F.count("*").alias("g"))
+    def pair_total(df: DataFrame, group_cols) -> int:
+        """Sum of C(g, 2) over the group sizes of ``df`` by ``group_cols``."""
+        sizes = df.groupBy(*group_cols).agg(F.count("*").alias("g"))
         row = sizes.agg(F.sum((F.col("g") * (F.col("g") - 1) / 2).cast("long")).alias("n")).collect()[0]
         return int(row["n"] or 0)
 
-    total_scoped = pair_total(["planted_entity", "tool", "role"])
-    total_all = pair_total(["planted_entity"])
+    total_scoped = pair_total(t, ["planted_entity", "tool", "role"])
+    total_all = pair_total(t, ["planted_entity"])
     out: Dict[str, object] = {
         "true_pairs_total": total_all,
         "true_pairs_same_keyspace": total_scoped,
@@ -556,14 +552,8 @@ def blocking_recall(
         out["band_key_recall_gain"] = round(out["recall"] - out["token_key_recall"], 6)
     if clusters is not None:
         tc = t.join(clusters.select("turn_key", "cluster_id"), "turn_key")
-
-        def same_cluster_pairs(group_cols) -> int:
-            sizes = tc.groupBy("cluster_id", *group_cols).agg(F.count("*").alias("g"))
-            row = sizes.agg(F.sum((F.col("g") * (F.col("g") - 1) / 2).cast("long")).alias("n")).collect()[0]
-            return int(row["n"] or 0)
-
-        got_scoped = same_cluster_pairs(["planted_entity", "tool", "role"])
-        got_all = same_cluster_pairs(["planted_entity"])
+        got_scoped = pair_total(tc, ["cluster_id", "planted_entity", "tool", "role"])
+        got_all = pair_total(tc, ["cluster_id", "planted_entity"])
         out["cluster_recall"] = round(got_scoped / total_scoped, 6) if total_scoped else 1.0
         out["cluster_recall_unscoped"] = round(got_all / total_all, 6) if total_all else 1.0
     return out
@@ -612,7 +602,6 @@ def main() -> None:
     parser.add_argument("--max-token-df", type=int, default=None, help="drop blocking tokens with document frequency above this (filler-stopword cap)")
     parser.add_argument("--hard-every", type=int, default=None, help="every Nth conversation is a hard-slice template conversation (sample dictionary only)")
     parser.add_argument("--snm-window", type=int, default=0, help="union sorted-neighborhood window-key blocks (window size; 0/1 = off)")
-    parser.add_argument("--fuse-pairs", action=argparse.BooleanOptionalAction, default=True, help="skip the candidate-pair checkpoint and feed the self-join plan straight into scoring (default; --no-fuse-pairs restores the per-stage pair checkpoint for finer resume)")
     parser.add_argument("--skip-eval", action="store_true", help="skip the (untimed) F1 + recall audit pass — for timing-only A/B runs; never use when reporting quality numbers")
     args = parser.parse_args()
 
@@ -637,13 +626,12 @@ def main() -> None:
     ).save()
 
     start = time.time()
-    result = run_er_pipeline(spark, args.workdir, transcripts, model=model, max_token_df=args.max_token_df, fuse_pairs=args.fuse_pairs, snm_window=args.snm_window)
+    result = run_er_pipeline(spark, args.workdir, transcripts, model=model, max_token_df=args.max_token_df, snm_window=args.snm_window)
     wall = time.time() - start  # the pipeline (all stages materialized)
     # row counts come from stage lineage — no extra count jobs in the
     # timed window; the F1 audit below reads the materialized checkpoints
     # and is timed separately (it is a verification pass, not a stage).
-    sp_metrics = result["metrics"]["scored_pairs"]
-    n_pairs = int(sp_metrics.get("pairs_full", sp_metrics["rows"]))
+    n_pairs = int(result["metrics"]["scored_pairs"]["pairs_full"])
     # a resumed stage did none of its work in this window: no throughput
     resumed = [k for k, v in result["metrics"].items() if isinstance(v, dict) and v.get("resumed")]
     eval_start = time.time()

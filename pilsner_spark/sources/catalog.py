@@ -3,10 +3,14 @@
 The production deployment targets Iceberg tables (`df.writeTo(...)` +
 `spark.sql.catalog.*`); this sandbox has no Iceberg jars, so the same
 interface falls back to partitioned Parquet plus a ``_lineage.json``
-sidecar carrying what an Iceberg snapshot would: stage parameters hash,
-row/partition counts, wall time, input lineage. All checkpoint/resume logic
-is written against this interface so the Iceberg path is config-only
-(SURVEY.md §7.0).
+sidecar per table. The sidecar carries the stage params and their hash,
+the row count, per-partition row counts, the write wall time, the schema,
+and the stage's own facts (counts its write job observed, such as CC
+convergence). It is the resume key: a table resumes when its sidecar
+records the same params hash. The key covers params only — the input
+data and the upstream checkpoints do not enter it. All checkpoint/resume
+logic is written against this interface so the Iceberg path is
+config-only (SURVEY.md §7.0).
 """
 
 from __future__ import annotations
@@ -16,7 +20,7 @@ import json
 import os
 import time
 from dataclasses import dataclass
-from typing import Optional
+from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -38,23 +42,32 @@ class Catalog:
     def _lineage_path(self, table: str) -> str:
         return os.path.join(self.root, f"{table}._lineage.json")
 
-    def exists(self, table: str, expected_params: Optional[dict] = None) -> bool:
-        """A table checkpoint is valid if its data and lineage exist and the
-        recorded params hash matches — the stage-skip test for resume."""
-        if not os.path.exists(self._lineage_path(table)):
-            return False
-        if expected_params is None:
-            return True
-        try:
-            with open(self._lineage_path(table)) as f:
-                lineage = json.load(f)
-        except (OSError, json.JSONDecodeError):
-            return False
-        return lineage.get("params_hash") == params_hash(expected_params)
+    def exists(self, table: str, params: dict) -> Optional[dict]:
+        """The table's lineage when it is a resumable checkpoint under
+        ``params`` (sidecar present, readable, same params hash), else
+        None — the stage-skip test for resume."""
+        lineage = self.lineage(table)
+        if lineage is None or lineage.get("params_hash") != params_hash(params):
+            return None
+        return lineage
 
-    def write(self, df: DataFrame, table: str, params: Optional[dict] = None) -> dict:
-        """Materialize a stage output + lineage sidecar; returns metrics."""
+    def write(
+        self,
+        df: DataFrame,
+        table: str,
+        params: Optional[dict] = None,
+        facts: Optional[Callable[[DataFrame], dict]] = None,
+    ) -> dict:
+        """Materialize a stage output and commit its lineage; returns the
+        lineage. The sidecar goes first and comes back last, so a write,
+        or a ``facts`` call, that fails or is killed leaves no sidecar and
+        the next run recomputes. ``facts(out)`` runs on the written table
+        after the write job (Observation values are ready) and its dict is
+        merged into the lineage."""
         start = time.time()
+        lineage_path = self._lineage_path(table)
+        if os.path.exists(lineage_path):
+            os.remove(lineage_path)
         path = self._path(table)
         if self.use_iceberg:
             df.writeTo(table).createOrReplace()
@@ -94,11 +107,16 @@ class Catalog:
             "params": params or {},
             "rows": int(sum(p["rows"] for p in per_partition)),
             "partitions": per_partition,
+            # the write job (and footer reads); facts count as stage work
             "wall_seconds": round(time.time() - start, 3),
             "schema": out.schema.simpleString(),
         }
-        with open(self._lineage_path(table), "w") as f:
+        if facts is not None:
+            lineage.update(facts(out))
+        tmp = f"{lineage_path}.tmp"
+        with open(tmp, "w") as f:
             json.dump(lineage, f, indent=1)
+        os.replace(tmp, lineage_path)
         return lineage
 
     def read(self, table: str) -> DataFrame:
@@ -106,20 +124,9 @@ class Catalog:
             return self.spark.read.table(table)
         return self.spark.read.parquet(self._path(table))
 
-    def amend_lineage(self, table: str, extra: dict) -> None:
-        """Merge stage-level metrics (e.g. Observation results collected
-        during the write job) into the lineage sidecar, so they survive
-        resume exactly like row counts do."""
-        lineage = self.lineage(table)
-        if lineage is None:
-            return
-        lineage.update(extra)
-        with open(self._lineage_path(table), "w") as f:
-            json.dump(lineage, f, indent=1)
-
     def lineage(self, table: str) -> Optional[dict]:
         try:
             with open(self._lineage_path(table)) as f:
                 return json.load(f)
-        except OSError:
+        except (OSError, json.JSONDecodeError):
             return None

@@ -69,6 +69,10 @@ def test_corpus_prep_resumes_from_checkpoints(spark, corpus, tmp_path):
     assert {r.doc_id for r in second["filtered"].collect()} == {
         r.doc_id for r in first["filtered"].collect()
     }
+    # the drop-reason counts are a fact of the drops lineage: a resume
+    # reports them without recounting the ledger
+    assert second["metrics"]["summary"]["drop_reasons"] == first["metrics"]["summary"]["drop_reasons"]
+    assert first["metrics"]["summary"]["drop_reasons"] == {"exact_dup": 1, "near_dup": 2, "contaminated": 1}
     # changed params -> stale checkpoint is NOT reused
     third = run_corpus_prep(spark, wd, corpus, benchmark=bench, pack_budget=256)
     assert third["metrics"]["packed_train"]["resumed"] is False
@@ -113,6 +117,8 @@ def test_corpus_prep_gopher_gate(spark, corpus, tmp_path):
     )
     assert second["metrics"]["doc_stats"]["resumed"] is True
     assert {r.doc_id for r in second["filtered"].collect()} == retained
+    # the rejected count is a fact of the doc_stats lineage
+    assert second["metrics"]["summary"]["gopher_rejected"] == res["metrics"]["summary"]["gopher_rejected"]
     # different gopher params -> stats checkpoint is stale, not reused
     third = run_corpus_prep(
         spark,

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 from pilsner_spark.operators.blocking import candidate_pairs, token_blocks, salt_oversized_blocks, with_turn_key
 from pilsner_spark.operators.clustering import cluster_turns, connected_components
 from pilsner_spark.operators.mentions import extract_mentions_df, normalized_text_df, turn_entities_df
-from pilsner_spark.plans.pipeline import evaluate_f1, run_er_pipeline
+from pilsner_spark.plans.pipeline import Pipeline, evaluate_f1, run_er_pipeline
 from pilsner_spark.sources.sample_dictionary import build_sample_model
 from pilsner_spark.sources.synth import SAMPLE_PLANTS, synth_transcripts
 
@@ -469,9 +469,14 @@ def test_pipeline_resume(spark, transcripts, tmp_path):
     r2 = run_er_pipeline(spark, work, transcripts, fuse_pairs=False)
     resumed = [k for k, m in r2["metrics"].items() if isinstance(m, dict) and m.get("resumed")]
     assert set(resumed) >= {"turns_normalized", "mentions", "blocks", "candidate_pairs", "scored_pairs", "entity_clusters"}
-    # CC convergence comes back from lineage, not as an empty dict
+    # stage facts come back from lineage: CC convergence, salted-key
+    # counts and the scored-stage Observation counts
     assert r1["metrics"]["clustering_convergence"]["converged"] is True
     assert r2["metrics"]["clustering_convergence"] == r1["metrics"]["clustering_convergence"]
+    assert set(r1["metrics"]["blocking_salted_keys"]) == {"count", "band_keys", "token_keys"}
+    assert r2["metrics"]["blocking_salted_keys"] == r1["metrics"]["blocking_salted_keys"]
+    for k in ("pairs_full", "shared_rows", "undecided_rows"):
+        assert r2["metrics"]["scored_pairs"][k] == r1["metrics"]["scored_pairs"][k] > 0, k
     # param change -> stages recompute
     r3 = run_er_pipeline(spark, work, transcripts, jw_threshold=0.95, fuse_pairs=False)
     assert not r3["metrics"]["scored_pairs"].get("resumed")
@@ -505,6 +510,10 @@ def test_pipeline_compact_scored_parity(spark, transcripts, tmp_path):
     r_comp = run_er_pipeline(spark, str(tmp_path / "comp"), transcripts)
     m = r_comp["metrics"]["scored_pairs"]
     assert m["pairs_full"] == r_full["metrics"]["scored_pairs"]["rows"]
+    # the full layout observes the same counts and keeps every row
+    assert r_full["metrics"]["scored_pairs"]["pairs_full"] == r_full["metrics"]["scored_pairs"]["rows"]
+    for k in ("shared_rows", "undecided_rows"):
+        assert r_full["metrics"]["scored_pairs"][k] == m[k], k
     # the decided-nonmatch majority really was dropped
     assert 0 < m["rows"] < m["pairs_full"]
     assert m["rows"] == m["undecided_rows"] + m["shared_rows"]  # disjoint by construction
@@ -524,6 +533,53 @@ def test_pipeline_compact_scored_parity(spark, transcripts, tmp_path):
     r_res = run_er_pipeline(spark, str(tmp_path / "comp"), transcripts)
     assert r_res["metrics"]["scored_pairs"]["resumed"]
     assert r_res["metrics"]["scored_pairs"]["pairs_full"] == m["pairs_full"]
+
+
+def _rows_stage(spark, n: int):
+    return lambda: spark.range(n).select(F.col("id").alias("x"))
+
+
+def test_stage_failed_recompute_does_not_resume_stale_sidecar(spark, tmp_path):
+    """A stage written with p1, then recomputed with p2 by a plan that fails
+    inside the write job, must recompute on the next p1 call: the p2 write
+    has already overwritten the p1 data, so a p1 sidecar left in place
+    would resume onto a missing table."""
+    work = str(tmp_path / "stale")
+    assert Pipeline(spark, work, {"p": 1}).stage("t", _rows_stage(spark, 3)).count() == 3
+
+    def failing():
+        boom = F.raise_error(F.lit("stage write failed"))
+        return spark.range(5).select(F.when(F.col("id") >= 0, boom).otherwise(F.col("id")).alias("x"))
+
+    with pytest.raises(Exception, match="stage write failed"):
+        Pipeline(spark, work, {"p": 2}).stage("t", failing)
+    pipe = Pipeline(spark, work, {"p": 1})
+    out = pipe.stage("t", _rows_stage(spark, 3))
+    assert pipe.metrics["t"]["resumed"] is False
+    assert sorted(r.x for r in out.collect()) == [0, 1, 2]
+
+
+def test_stage_failing_facts_leave_no_resumable_checkpoint(spark, tmp_path):
+    """Facts are part of the one lineage commit: a facts call that raises
+    after the data write leaves no sidecar, so the next call recomputes;
+    committed facts come back on resume."""
+    work = str(tmp_path / "facts")
+
+    def bad_facts(out):
+        raise RuntimeError("facts failed")
+
+    with pytest.raises(RuntimeError, match="facts failed"):
+        Pipeline(spark, work, {"p": 1}).stage("t", _rows_stage(spark, 3), facts=bad_facts)
+    pipe = Pipeline(spark, work, {"p": 1})
+    pipe.stage("t", _rows_stage(spark, 3), facts=lambda out: {"n": out.count()})
+    assert pipe.metrics["t"]["resumed"] is False and pipe.metrics["t"]["n"] == 3
+
+    def never(*_):
+        raise AssertionError("a resumed stage must not recompute")
+
+    resumed = Pipeline(spark, work, {"p": 1})
+    assert resumed.stage("t", never, facts=never).count() == 3
+    assert resumed.metrics["t"]["resumed"] is True and resumed.metrics["t"]["n"] == 3
 
 
 def test_lineage_recorded(spark, transcripts, tmp_path):

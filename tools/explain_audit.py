@@ -117,7 +117,7 @@ CHECKS = {
             ("no row-at-a-time Python", r"BatchEvalPython"),
         ],
     },
-    # the fused variant (pipeline --fuse-pairs): scored stage consumes the
+    # the fused variant (run_er_pipeline's default): scored stage consumes the
     # UNmaterialized block self-join. Budget: exactly one Exchange, the
     # round-robin spread of the tiny block table (MBs); the |pairs|-sized
     # stream goes scan -> broadcast self-join -> broadcast feature joins ->
