@@ -11,7 +11,10 @@ run-to-run wall-clock noise, so the two levels run INTERLEAVED (N, 4N, N,
 4N, ...) for ``--reps`` repetitions and the per-level median throughput is
 reported, with all raw samples retained in the output file.
 
-Usage: python bench_scaling.py [--scale 0.008] [--base-cpus 4] [--reps 3]
+Usage: python bench_scaling.py [--scale 0.008] [--base-cpus N] [--reps 3]
+
+``--base-cpus`` defaults to a quarter of the host's cores, so the 4N leg
+never asks for more cores than the host has (1 vs 4 on a 4-vCPU host).
 """
 
 from __future__ import annotations
@@ -62,7 +65,7 @@ def run_once(cpus: int, scale: float, entities: int, seed: int, max_token_df=Non
 def main() -> None:
     parser = argparse.ArgumentParser()
     parser.add_argument("--scale", type=float, default=0.008)
-    parser.add_argument("--base-cpus", type=int, default=4)
+    parser.add_argument("--base-cpus", type=int, default=max(1, (os.cpu_count() or 4) // 4))
     parser.add_argument("--entities", type=int, default=8000)
     parser.add_argument("--max-token-df", type=int, default=None)
     parser.add_argument("--seed", type=int, default=42)

@@ -65,6 +65,14 @@ def token_blocks(
     )
 
 
+BAND_KEY_PREFIX = "mh"  # 'mh<band>#<hash>#<tool>#<role>', salting appends '#<bucket>'
+
+
+def is_band_key() -> Column:
+    """``block_key`` is a ``minhash_blocks`` key (a token key may start 'mhz#')."""
+    return F.col("block_key").rlike(f"^{BAND_KEY_PREFIX}[0-9]+#")
+
+
 def minhash_blocks(
     turns: DataFrame,
     norm_col: str = "norm_text",
@@ -93,7 +101,7 @@ def minhash_blocks(
         bands.append(
             F.concat_ws(
                 "#",
-                F.lit(f"mh{b}"),
+                F.lit(f"{BAND_KEY_PREFIX}{b}"),
                 F.xxhash64(*parts).cast("string"),
                 F.col("tool"),
                 F.col("role"),

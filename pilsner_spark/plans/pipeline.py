@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from pilsner_spark.operators.blocking import (
     candidate_pairs,
+    is_band_key,
     minhash_blocks,
     salt_oversized_blocks,
     snm_blocks,
@@ -42,6 +43,9 @@ from pilsner_spark.operators.scoring import (
 )
 from pilsner_spark.sources.catalog import Catalog
 from pilsner_spark.sources.synth import SAMPLE_PLANTS, pipeline_input, synth_transcripts
+
+# per-turn tables up to this many rows are broadcast into O(pairs) joins
+BROADCAST_ROW_LIMIT = 2_000_000
 
 
 def default_model():
@@ -71,18 +75,22 @@ class Pipeline:
         """Run or resume one stage: skip when a checkpoint with the same
         params hash exists; otherwise compute, materialize, and commit the
         lineage with ``facts`` merged in (``Catalog.write``). A resumed
-        stage gets its facts back from that lineage."""
+        stage gets its facts back from that lineage. A computed stage
+        returns the table ``Catalog.write`` already read back."""
         stage_params = {**self.params, **(params or {})}
         lineage = self.catalog.exists(name, stage_params)
         if lineage is not None:
             self.metrics[name] = {**lineage, "resumed": True}
             return self.catalog.read(name)
+        written = []
         start = time.time()
-        lineage = self.catalog.write(fn(), name, stage_params, facts)
+        lineage = self.catalog.write(
+            fn(), name, stage_params, lambda out: written.append(out) or (facts(out) if facts else {})
+        )
         lineage["stage_wall_seconds"] = round(time.time() - start, 3)
         lineage["resumed"] = False
         self.metrics[name] = lineage
-        return self.catalog.read(name)
+        return written[0]
 
 
 def run_er_pipeline(
@@ -95,7 +103,7 @@ def run_er_pipeline(
     max_token_df: Optional[int] = None,
     jw_threshold: float = 0.92,
     jaccard_threshold: float = 0.6,
-    broadcast_row_limit: int = 2_000_000,
+    broadcast_row_limit: int = BROADCAST_ROW_LIMIT,
     broadcast_block_bytes: int = 512 << 20,
     use_minhash_blocks: bool = True,
     minhash_num_hashes: int = 16,
@@ -179,14 +187,11 @@ def run_er_pipeline(
     def salted_key_counts(_: DataFrame) -> dict:
         # one cheap aggregation over the raw checkpoint for the
         # no-silent-truncation report, split by key family so band-key skew
-        # is visible separately from token skew. Band keys are
-        # 'mh<band#>#<hash>#<tool>#<role>' (blocking.minhash_blocks); a
-        # full-prefix match, not startswith('mh') — a corpus token beginning
-        # with 'mh' (e.g. 'mhz') must not be miscounted as a band key.
+        # is visible separately from token skew
         oversized = salt_oversized_blocks(raw_blocks, max_block_size, salt_buckets)[1]
         counts = oversized.agg(
             F.count("*").alias("total"),
-            F.sum(F.when(F.col("block_key").rlike("^mh[0-9]+#"), 1).otherwise(0)).alias("band"),
+            F.sum(F.when(is_band_key(), 1).otherwise(0)).alias("band"),
         ).collect()[0]
         total, band = int(counts["total"] or 0), int(counts["band"] or 0)
         return {"salted_keys": {"count": total, "band_keys": band, "token_keys": total - band}}
@@ -330,80 +335,80 @@ def run_er_pipeline(
         # the salted blocks checkpoint (stage 'blocks' — its own materialized
         # stage after the two-stage split, distinct from the raw construction
         # checkpoint 'blocks_raw') — what candidate pairs were actually built
-        # from; audits (blocking_recall family split) must use THIS, not the
-        # raw checkpoint, so reported recall reflects salting loss honestly
+        # from; the audit's token-key recall (evaluate_f1 blocks=) must use
+        # THIS, not the raw checkpoint, so it reflects salting loss honestly
         "blocks_salted": blocks,
         "metrics": pipe.metrics,
         "pipeline": pipe,
     }
 
 
-def evaluate_f1(scored: DataFrame, clusters: DataFrame, truth: DataFrame) -> Dict[str, object]:
-    """Pairwise F1 on labeled pairs *at the same blocking key*: the labeled
-    pairs are the candidate pairs whose two turns both carry planted ground
-    truth (FIXTURES.md §5); a pair is predicted positive when the two turns
-    land in the same cluster.
-
-    ``scored`` is any DataFrame carrying the complete candidate-pair key
-    set as (key_a, key_b) — pass ``result["pairs_all"]``, NOT the scored
-    checkpoint: under the compact layout the checkpoint keeps only the
-    live (shared/undecided) rows, which would silently drop the
-    decided-nonmatch labeled pairs from the fn count.
-
-    When the corpus carries ``plant_style`` (hard-slice corpora, synth.py),
-    a ``hard_slice`` sub-report covers the pairs with at least one
-    hard-slice side (typo / typo_clean / hard_neg) — the pairs that the
-    similarity features and the conflicting-entities veto must decide."""
-    has_styles = "plant_style" in truth.columns
-    t_cols = ["turn_key", "planted_entity"] + (["plant_style"] if has_styles else [])
-    t = with_turn_key(truth).select(*t_cols)
-
-    def side(suffix: str) -> DataFrame:
-        renames = {"turn_key": f"key_{suffix}", "planted_entity": f"entity_{suffix}", "plant_style": f"style_{suffix}"}
-        return t.select(*[F.col(c).alias(renames[c]) for c in t_cols])
-
-    labeled = (
-        scored.select("key_a", "key_b").dropDuplicates(["key_a", "key_b"])
-        .join(side("a"), "key_a")
-        .join(side("b"), "key_b")
-        .filter(F.col("entity_a").isNotNull() & F.col("entity_b").isNotNull())
-        .withColumn("same_entity", F.col("entity_a") == F.col("entity_b"))
+def audit_plan(
+    pairs: DataFrame, clusters: DataFrame, truth: DataFrame, blocks: Optional[DataFrame] = None
+) -> DataFrame:
+    """The one-row aggregation behind :func:`evaluate_f1` (same arguments)."""
+    # the O(turns) side first: labeled truth x clusters, the hard-style flag
+    # (synth.py's hard slice) and the turn's token-family keys (every key
+    # but a band key, snm keys included); materialized once, joined twice
+    styled = "plant_style" in truth.columns
+    hard = F.col("plant_style").isin("typo", "typo_clean", "hard_neg") if styled else F.lit(False)
+    per_turn = (
+        with_turn_key(truth)
+        .filter(F.col("planted_entity").isNotNull())
+        .select("turn_key", F.col("planted_entity").alias("entity"), F.coalesce(hard, F.lit(False)).alias("hard"))
+        .join(clusters.select("turn_key", F.col("cluster_id").alias("cluster")), "turn_key")
     )
-    c = clusters.select("turn_key", "cluster_id")
-    predicted = (
-        labeled.join(c.withColumnRenamed("turn_key", "key_a").withColumnRenamed("cluster_id", "cluster_a"), "key_a")
-        .join(c.withColumnRenamed("turn_key", "key_b").withColumnRenamed("cluster_id", "cluster_b"), "key_b")
-        .withColumn("predicted", F.col("cluster_a") == F.col("cluster_b"))
-    )
-    if has_styles:
-        hard = F.col("style_a").isin("typo", "typo_clean", "hard_neg") | F.col(
-            "style_b"
-        ).isin("typo", "typo_clean", "hard_neg")
-        predicted = predicted.withColumn("hard", hard)
-    else:
-        predicted = predicted.withColumn("hard", F.lit(False))
+    if blocks is not None:
+        keys = blocks.filter(~is_band_key()).groupBy("turn_key").agg(F.collect_set("block_key").alias("token_keys"))
+        per_turn = per_turn.join(keys, "turn_key", "left")
+    per_turn = per_turn.localCheckpoint()
+    bcast = per_turn.count() <= BROADCAST_ROW_LIMIT
 
-    def counts(pred: F.Column, truth_pos: F.Column, within: F.Column):
-        return [
-            F.sum(F.when(within & pred & truth_pos, 1).otherwise(0)),
-            F.sum(F.when(within & pred & ~truth_pos, 1).otherwise(0)),
-            F.sum(F.when(within & ~pred & truth_pos, 1).otherwise(0)),
-            F.sum(F.when(within, 1).otherwise(0)),
-        ]
-    # one aggregation job covers overall + hard slice
-    aggs = counts(F.col("predicted"), F.col("same_entity"), F.lit(True)) + counts(
-        F.col("predicted"), F.col("same_entity"), F.col("hard")
-    )
-    row = predicted.agg(*aggs).collect()[0]
+    def side(s: str) -> DataFrame:
+        df = per_turn.select(*[F.col(c).alias(f"key_{s}" if c == "turn_key" else f"{c}_{s}") for c in per_turn.columns])
+        return F.broadcast(df) if bcast else df
 
-    def report(tp, fp, fn, pairs) -> Dict[str, object]:
-        tp, fp, fn = tp or 0, fp or 0, fn or 0
-        pairs = int(pairs or 0)
+    labeled = F.col("entity_a").isNotNull() & F.col("entity_b").isNotNull()
+    same, pred = F.col("entity_a") == F.col("entity_b"), F.col("cluster_a") == F.col("cluster_b")
+    cases = {"tp": pred & same, "fp": pred & ~same, "fn": ~pred & same, "labeled": F.lit(True)}
+    aggs = [F.count(F.lit(1)).alias("distinct_pairs")] + [
+        F.count_if(within & case).alias(prefix + k)
+        for prefix, within in (("", labeled), ("hard_", labeled & (F.col("hard_a") | F.col("hard_b"))))
+        for k, case in cases.items()
+    ]
+    if blocks is not None:
+        overlap = F.arrays_overlap("token_keys_a", "token_keys_b")
+        aggs.append(F.count_if(labeled & same & overlap).alias("token_pairs_caught"))
+    # the pair distinct is the plan's only pair-sized shuffle
+    pairs = pairs.select("key_a", "key_b").distinct()
+    return pairs.join(side("a"), "key_a", "left").join(side("b"), "key_b", "left").agg(*aggs)
+
+
+def evaluate_f1(
+    pairs: DataFrame, clusters: DataFrame, truth: DataFrame, blocks: Optional[DataFrame] = None
+) -> Dict[str, object]:
+    """The audit pass, one aggregation job. Pairwise F1 on labeled pairs
+    *at the same blocking key*: the distinct candidate pairs whose two
+    turns both carry planted ground truth (FIXTURES.md §5); a pair is
+    predicted positive when the two turns land in the same cluster.
+
+    ``pairs`` carries the complete candidate-pair key set as (key_a,
+    key_b) — pass ``result["pairs_all"]``, NOT the compact scored
+    checkpoint, which drops the decided-nonmatch pairs (the fn count).
+    The report adds ``distinct_pairs``, and, when the corpus carries
+    ``plant_style``, a ``hard_slice`` sub-report over the labeled pairs
+    with a typo / typo_clean / hard_neg side. With ``blocks`` (the salted
+    block table), ``token_pairs_caught`` counts the same-entity labeled
+    pairs sharing a token-family key: :func:`blocking_recall`'s input."""
+    row = audit_plan(pairs, clusters, truth, blocks).collect()[0]
+
+    def report(prefix: str) -> Dict[str, object]:
+        tp, fp, fn, n = (int(row[prefix + k]) for k in ("tp", "fp", "fn", "labeled"))
         # An EMPTY slice must not read as a perfect score: earlier rounds
         # emitted f1=1.0 for unplanted hard slices and LADDER.md readers
         # concluded the slice passed at every rung (VERDICT r4 "What's
         # wrong" item 3). Zero labeled pairs -> metrics are n/a, flagged.
-        if pairs == 0:
+        if n == 0:
             return {
                 "tp": 0, "fp": 0, "fn": 0, "labeled_pairs": 0,
                 "precision": None, "recall": None, "f1": None,
@@ -413,18 +418,20 @@ def evaluate_f1(scored: DataFrame, clusters: DataFrame, truth: DataFrame) -> Dic
         recall = tp / (tp + fn) if tp + fn else 1.0
         f1 = 2 * precision * recall / (precision + recall) if precision + recall else 0.0
         return {
-            "tp": int(tp),
-            "fp": int(fp),
-            "fn": int(fn),
-            "labeled_pairs": pairs,
+            "tp": tp,
+            "fp": fp,
+            "fn": fn,
+            "labeled_pairs": n,
             "precision": round(precision, 6),
             "recall": round(recall, 6),
             "f1": round(f1, 6),
         }
 
-    out = report(row[0], row[1], row[2], row[3])
-    if has_styles:
-        out["hard_slice"] = report(row[4], row[5], row[6], row[7])
+    out = {**report(""), "distinct_pairs": int(row["distinct_pairs"])}
+    if "plant_style" in truth.columns:
+        out["hard_slice"] = report("hard_")
+    if blocks is not None:
+        out["token_pairs_caught"] = int(row["token_pairs_caught"])
     return out
 
 
@@ -486,7 +493,7 @@ def bcubed(clusters: DataFrame, truth: DataFrame, scope_cols: Sequence[str] = ()
 def blocking_recall(
     truth: DataFrame,
     caught_true_pairs: int,
-    blocks: Optional[DataFrame] = None,
+    caught_token_pairs: Optional[int] = None,
     clusters: Optional[DataFrame] = None,
 ) -> Dict[str, object]:
     """Fraction of ALL ground-truth positive pairs that blocking put into
@@ -497,9 +504,9 @@ def blocking_recall(
 
     ``caught_true_pairs`` = tp + fn from :func:`evaluate_f1` (same-entity
     labeled pairs present among candidates). Denominators are analytic —
-    sums of C(g, 2) over group sizes — so no quadratic pair table is ever
-    materialized. Two universes are reported because the north rule's key
-    structurally includes (tool, role):
+    sums of C(g, 2) over group sizes — and the numerators come from the
+    audit pass, so this runs no pair-level job. Two universes are reported
+    because the north rule's key structurally includes (tool, role):
 
     * ``recall`` — against same-entity pairs WITH the same (tool, role):
       the rule-scoped number, isolating genuine blocking luck (token
@@ -508,11 +515,11 @@ def blocking_recall(
     * ``recall_unscoped`` — against ALL same-entity pairs, quantifying
       what the (tool, role) key constraint itself excludes.
 
-    With ``blocks`` (the salted block table), a second count restricted to
-    token-family keys splits the recall by key family (band keys carry the
-    'mh<band>#' prefix). With ``clusters``, ``cluster_recall`` /
-    ``cluster_recall_unscoped`` report the fraction of true pairs that END
-    UP in the same cluster — the unconditional end-to-end number:
+    ``caught_token_pairs`` = evaluate_f1's ``token_pairs_caught`` splits
+    the recall by key family (``token_key_recall``; the band keys add
+    ``band_key_recall_gain`` on top). With ``clusters``, ``cluster_recall``
+    / ``cluster_recall_unscoped`` report the fraction of true pairs that
+    END UP in the same cluster — the unconditional end-to-end number:
     transitive clustering can recover pairs blocking never compared (two
     surfaces of one entity with disjoint tokens merge through any chain of
     matched intermediates), so this can exceed blocking recall; both
@@ -536,19 +543,8 @@ def blocking_recall(
         "recall": round(caught_true_pairs / total_scoped, 6) if total_scoped else 1.0,
         "recall_unscoped": round(caught_true_pairs / total_all, 6) if total_all else 1.0,
     }
-    if blocks is not None:
-        # the family split re-generates token-only candidate pairs WITH a
-        # distinct — measured ~2x the whole F1 eval at 203M pairs / 2 cores.
-        # It is an audit, so callers gate it by pair volume (see main()).
-        token_only = blocks.filter(~F.col("block_key").rlike("^mh[0-9]+#"))
-        tp_pairs = candidate_pairs(token_only)  # dedupe=True: a set, small-side audit
-        caught_token = (
-            tp_pairs.join(t.withColumnRenamed("turn_key", "key_a").withColumnRenamed("planted_entity", "entity_a"), "key_a")
-            .join(t.withColumnRenamed("turn_key", "key_b").withColumnRenamed("planted_entity", "entity_b"), "key_b")
-            .filter(F.col("entity_a") == F.col("entity_b"))
-            .count()
-        )
-        out["token_key_recall"] = round(caught_token / total_scoped, 6) if total_scoped else 1.0
+    if caught_token_pairs is not None:
+        out["token_key_recall"] = round(caught_token_pairs / total_scoped, 6) if total_scoped else 1.0
         out["band_key_recall_gain"] = round(out["recall"] - out["token_key_recall"], 6)
     if clusters is not None:
         tc = t.join(clusters.select("turn_key", "cluster_id"), "turn_key")
@@ -635,22 +631,17 @@ def main() -> None:
     # a resumed stage did none of its work in this window: no throughput
     resumed = [k for k, v in result["metrics"].items() if isinstance(v, dict) and v.get("resumed")]
     eval_start = time.time()
-    scores, recall_report, distinct = {}, None, {}
+    scores, recall_report = {}, None
     if not args.skip_eval:
-        # scored rows count a pair once per block key it shares
-        distinct = {"distinct_pairs": result["pairs_all"].distinct().count()}
-        scores = evaluate_f1(result["pairs_all"], result["clusters"], transcripts)
+        scores = evaluate_f1(result["pairs_all"], result["clusters"], transcripts, blocks=result["blocks_salted"])
         scores["bcubed"] = {
             "scoped": bcubed(result["clusters"], transcripts, scope_cols=("tool", "role")),
             "unscoped": bcubed(result["clusters"], transcripts),
         }
-        # family-split recount regenerates the token-pair set; worth it as an
-        # audit below ~50M pairs, skipped (keys absent from the report) above
-        family_split = n_pairs <= 50_000_000
         recall_report = blocking_recall(
             transcripts,
             caught_true_pairs=scores["tp"] + scores["fn"],
-            blocks=result["blocks_salted"] if family_split else None,
+            caught_token_pairs=scores.pop("token_pairs_caught"),
             clusters=result["clusters"],
         )
     eval_wall = time.time() - eval_start
@@ -658,7 +649,6 @@ def main() -> None:
         "n_convs": n_convs,
         "n_turns": int(result["metrics"]["turns_normalized"]["rows"]),
         "pairs_scored": n_pairs,
-        **distinct,
         "wall_seconds": round(wall, 2),
         "pairs_per_second": None if resumed else round(n_pairs / wall, 1),
         "resumed_stages": resumed,

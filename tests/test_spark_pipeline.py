@@ -261,6 +261,49 @@ def test_bcubed_hand_computed(spark):
     assert got["f1"] == round(44 / 69, 6)
 
 
+def test_audit_hand_computed(spark):
+    """One audit pass over a hand-built block table. Gold: a,b,c=E1 (c
+    typo_clean); d=E2 (hard_neg); e=E3; f,g=E4 (g typo); u unplanted.
+    Blocks: a-b share a token key AND a band key (one distinct pair);
+    a-c only a band key; f-g only 'mhz#...' — a token key, not a band key;
+    c-u, d-e one token key each. Clusters {a,b,c} {d,e} {f} {g} {u}:
+    tp a-b, a-c; fp d-e; fn f-g; c-u unlabeled; b-c never blocked.
+    Hard slice (a hard side): a-c tp, d-e fp, f-g fn."""
+    from pilsner_spark.plans.pipeline import blocking_recall
+
+    gold = [("a", "E1", None), ("b", "E1", None), ("c", "E1", "typo_clean"), ("d", "E2", "hard_neg"),
+            ("e", "E3", None), ("f", "E4", None), ("g", "E4", "typo"), ("u", None, None)]
+    truth = spark.createDataFrame(
+        [(c, 0, e, s, "t", "user") for c, e, s in gold],
+        "conv_id string, turn_idx int, planted_entity string, plant_style string, tool string, role string",
+    )
+    members = {"tok#t#user": "ab", "mh0#9#t#user": "ab", "mh1#7#t#user": "ac", "mhz#t#user": "fg",
+               "tok2#t#user": "cu", "tok3#t#user": "de"}
+    blocks = spark.createDataFrame(
+        [(f"{m}#0", k) for k, ms in members.items() for m in ms], "turn_key string, block_key string"
+    )
+    clusters = spark.createDataFrame(
+        [(f"{m}#0", f"{c}#0") for c, ms in {"a": "abc", "d": "de", "f": "f", "g": "g", "u": "u"}.items() for m in ms],
+        "turn_key string, cluster_id string",
+    )
+    pairs = candidate_pairs(blocks, dedupe=False)
+    assert pairs.count() == 6  # a-b twice
+    got = evaluate_f1(pairs, clusters, truth, blocks=blocks)
+    assert got["distinct_pairs"] == 5
+    assert (got["tp"], got["fp"], got["fn"], got["labeled_pairs"]) == (2, 1, 1, 4)
+    assert got["f1"] == round(2 / 3, 6)
+    hs = got["hard_slice"]
+    assert (hs["tp"], hs["fp"], hs["fn"], hs["labeled_pairs"], hs["f1"]) == (1, 1, 1, 3, 0.5)
+    assert got["token_pairs_caught"] == 2  # a-b and f-g
+    assert "token_pairs_caught" not in evaluate_f1(pairs, clusters, truth)
+
+    # true pairs in one (tool, role): E1 C(3,2) + E4 C(2,2) = 4
+    br = blocking_recall(truth, got["tp"] + got["fn"], caught_token_pairs=got["token_pairs_caught"], clusters=clusters)
+    assert (br["true_pairs_same_keyspace"], br["recall"]) == (4, 0.75)
+    assert (br["token_key_recall"], br["band_key_recall_gain"]) == (0.5, 0.25)
+    assert br["cluster_recall"] == 0.75
+
+
 def test_snm_blocks_pair_equivalence(spark):
     """snm_blocks' window keys induce EXACTLY the sorted-neighborhood pair
     set over the (tool, role, norm_text) sort order RESTRICTED to pairs
@@ -363,7 +406,8 @@ def test_er_pipeline_f1_gate(spark, transcripts, tmp_path):
     """The BASELINE.json gate: pairwise F1 >= 0.99 on labeled pairs at the
     same blocking key, sample-dictionary entity assignments as truth."""
     result = run_er_pipeline(spark, str(tmp_path / "work"), transcripts)
-    scores = evaluate_f1(result["pairs_all"], result["clusters"], transcripts)
+    scores = evaluate_f1(result["pairs_all"], result["clusters"], transcripts, blocks=result["blocks_salted"])
+    assert scores["distinct_pairs"] == result["pairs_all"].distinct().count()
     assert scores["labeled_pairs"] > 1000
     assert scores["f1"] >= 0.99, scores
     # the hard negative must be present: cross-entity pairs in same blocks
@@ -382,7 +426,7 @@ def test_er_pipeline_f1_gate(spark, transcripts, tmp_path):
     br = blocking_recall(
         transcripts,
         caught_true_pairs=scores["tp"] + scores["fn"],
-        blocks=result["blocks_salted"],
+        caught_token_pairs=scores["token_pairs_caught"],
         clusters=result["clusters"],
     )
     assert 0 < br["true_pairs_blocked"] <= br["true_pairs_same_keyspace"] <= br["true_pairs_total"]

@@ -377,6 +377,22 @@ CHECKS = {
             ("no shuffle", r"Exchange"),
         ],
     },
+    # the F1 audit (evaluate_f1): the per-turn table (truth x clusters x
+    # token-key sets) broadcast into both sides of the deduped pair stream;
+    # the pair distinct is the only pair-sized shuffle, and the block table
+    # is self-joined once (the pair generation), never again for the
+    # token-key recall
+    "er_audit": {
+        "want": [
+            ("per-turn table broadcast", r"BroadcastHashJoin"),
+            ("pair distinct shuffles on (key_a, key_b)", r"Arguments: hashpartitioning\(key_a#\d+, key_b#\d+"),
+        ],
+        "avoid": [
+            ("no sort-merge join", r"SortMergeJoin"),
+            ("one block_key self-join", r"Left keys \[1\]: \[block_key[\s\S]*Left keys \[1\]: \[block_key"),
+            ("one pair-sized shuffle", r"hashpartitioning\(key_a#\d+, key_b#\d+[\s\S]*hashpartitioning\(key_a#\d+, key_b#\d+"),
+        ],
+    },
 }
 
 
@@ -392,7 +408,7 @@ def _split_stage_dfs(spark):
         token_blocks,
         with_turn_key,
     )
-    from pilsner_spark.operators.clustering import connected_components
+    from pilsner_spark.operators.clustering import cluster_turns, connected_components
     from pilsner_spark.operators.mentions import extract_mentions_df, normalized_text_df, turn_entities_df
     from pilsner_spark.operators.scoring import (
         jw_scores_for_undecided,
@@ -400,6 +416,7 @@ def _split_stage_dfs(spark):
         star_match_edges,
         turn_features,
     )
+    from pilsner_spark.plans.pipeline import audit_plan
     from pilsner_spark.sources.sample_dictionary import build_sample_model
     from pilsner_spark.sources.synth import pipeline_input, synth_transcripts
 
@@ -435,6 +452,12 @@ def _split_stage_dfs(spark):
     star = star_match_edges(
         spark.read.parquet(f"{tmp}/blocks"), F.broadcast(ents_ck), spark.read.parquet(f"{tmp}/jw")
     )
+    cluster_turns(turns, star).write.mode("overwrite").parquet(f"{tmp}/clusters")
+    # the pipeline CLI's audit call: the lazy fused pair plan, clusters and
+    # salted blocks off their checkpoints
+    audit = audit_plan(
+        fused_pairs, spark.read.parquet(f"{tmp}/clusters"), tr, spark.read.parquet(f"{tmp}/blocks")
+    )
     return {
         "er_star_edges": star,
         # connected_components materializes the edges (one eager job) and
@@ -443,6 +466,7 @@ def _split_stage_dfs(spark):
         "er_scored_base": base,
         "er_scored_fused": score_pairs_base(fused_pairs, feats_ck, broadcast_features=True),
         "er_jw_slice": jw_slice,
+        "er_audit": audit,
     }
 
 
@@ -558,6 +582,7 @@ BUILDERS = {
     "er_jw_slice": _split("er_jw_slice"),
     "er_star_edges": _split("er_star_edges"),
     "er_cc_local": _split("er_cc_local"),
+    "er_audit": _split("er_audit"),
 }
 
 
