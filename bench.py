@@ -193,9 +193,10 @@ def main() -> None:
         er_walls.append(round(time.time() - start, 3))
         er_telemetry.append(telemetry_delta(stat0, read_proc_stat()))
     er_wall = min(er_walls)
-    # pair count from stage lineage/Observation — counting result["scored"]
-    # here would charge the timed window one checkpoint re-read the pipeline
-    # CLI does not charge (plans/pipeline.py main does the same)
+    # pair count from stage lineage/Observation — the scored checkpoint
+    # holds only the live rows, and counting the pairs here would charge the
+    # timed window a pass the pipeline CLI does not charge (plans/pipeline.py
+    # main does the same)
     n_pairs = int(result["metrics"]["scored_pairs"]["pairs_full"])
     f1 = evaluate_f1(result["pairs_all"], result["clusters"], transcripts)
     timings["er_pipeline"] = er_wall

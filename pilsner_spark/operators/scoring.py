@@ -18,7 +18,7 @@ and computes the set features in the JVM; stage 2
 (``jw_scores_for_undecided``) runs the JW/Levenshtein kernels (one Arrow
 round-trip per batch) on the undecided slice only. Edges come from
 ``split_match_edges`` (pairwise) or ``star_match_edges`` (star-sparsified
-shared-entity cliques); ``finalize_scored`` rebuilds the per-pair view.
+shared-entity cliques); no step joins the slice back to the pair rows.
 """
 
 from __future__ import annotations
@@ -225,35 +225,6 @@ def star_match_edges(
     shuffle (see ``star_shared_edges``)."""
     sim = jw_scores.filter(similarity_match(jw_threshold, jaccard_threshold)).select("key_a", "key_b")
     return star_shared_edges(blocks, turn_entities).unionByName(sim)
-
-
-def finalize_scored(
-    base: DataFrame,
-    jw_scores: DataFrame,
-    jw_threshold: float = 0.92,
-    jaccard_threshold: float = 0.6,
-    broadcast_jw: bool = True,
-) -> DataFrame:
-    """The full scored view, one row per scored pair with ``is_match``:
-    base pairs left-joined to the (deduplicated) jw slice — a broadcast
-    hash join when the slice fits (``broadcast_jw``), so consumers needing per-pair
-    jw/lev columns pay one map-side join, never a shuffle of |pairs|."""
-    j = jw_scores.select("key_a", "key_b", "lev_ratio", "jw")
-    if broadcast_jw:
-        j = F.broadcast(j)
-    return (
-        base.join(j, ["key_a", "key_b"], "left")
-        .withColumns(
-            {
-                "lev_ratio": F.coalesce("lev_ratio", F.lit(0.0)),
-                "jw": F.coalesce("jw", F.lit(0.0)),
-            }
-        )
-        .withColumn("is_match", F.col("shared_entity") | similarity_match(jw_threshold, jaccard_threshold))
-        .select(
-            "key_a", "key_b", "shared_entity", "conflicting_entities", "jaccard", "lev_ratio", "jw", "is_match"
-        )
-    )
 
 
 def threshold_sweep(

@@ -34,7 +34,6 @@ from pilsner_spark.operators.mentions import (
     turn_entities_df,
 )
 from pilsner_spark.operators.scoring import (
-    finalize_scored,
     jw_scores_for_undecided,
     score_pairs_base,
     split_match_edges,
@@ -125,8 +124,13 @@ def run_er_pipeline(
     (``snm_blocks``: sorted-neighborhood window keys, bounded at
     window_size members per key by construction — never salted).
 
-    Returns {'clusters': DataFrame, 'metrics': dict, 'pipeline': Pipeline}.
+    Returns {'clusters': DataFrame, 'pairs_all': DataFrame (the lazy
+    candidate-pair plan, key_a/key_b), 'blocks_salted': DataFrame (the
+    ``blocks`` checkpoint), 'metrics': dict, 'pipeline': Pipeline}.
     """
+    # perfbench/tracing.py reads both defaults by name; no other value exists
+    if fuse_pairs is not True or compact_scored is not True:
+        raise ValueError("fuse_pairs and compact_scored accept only True: the pipeline has one scored plan")
     model = model or default_model()
     params = {
         "max_block_size": max_block_size,
@@ -142,11 +146,8 @@ def run_er_pipeline(
         # stage); also versions the checkpoint schema so pre-split workdirs
         # recompute instead of resuming into the wrong layout
         "scoring_plan": "split-v2",
-        "fuse_pairs": fuse_pairs,
-        # compact: the scored checkpoint keeps only the rows downstream
-        # consumes (shared-entity + undecided); full pair mass is counted
-        # in-flight via Observation — versions the checkpoint layout
-        "scored_layout": "compact-v1" if compact_scored else "full",
+        # versions the scored checkpoint layout (shared-entity + undecided rows)
+        "scored_layout": "compact-v1",
         "model": model.config_json(),
     }
     pipe = Pipeline(spark, workdir, params)
@@ -155,11 +156,13 @@ def run_er_pipeline(
         "turns_normalized",
         lambda: with_turn_key(normalized_text_df(pipeline_input(transcripts), model)),
     )
-    mentions = pipe.stage(
+    # one row per turn with its resolved entity set: the scored stage's
+    # features and the star membership join both read this checkpoint
+    mention_entities = pipe.stage(
         "mentions",
-        lambda: extract_mentions_df(transcripts, model),
+        lambda: with_turn_key(turn_entities_df(extract_mentions_df(transcripts, model))),
+        params={"mentions_layout": "turn-entities-v1"},
     )
-    mention_entities = with_turn_key(turn_entities_df(mentions))
 
     def build_raw_blocks() -> DataFrame:
         blocks = token_blocks(turns, max_df=max_token_df)
@@ -216,53 +219,32 @@ def run_er_pipeline(
     # doubles — call it 96 B/row built. Default cap 512 MB ≈ 5.6M rows.
     bcast_blocks = 0 < n_blocks * 96 <= broadcast_block_bytes
 
-    def build_pairs() -> DataFrame:
-        # Row-budget spread of the streaming side (inside candidate_pairs):
-        # the block table dictionary-compresses to a few bytes/row, so even
-        # the lowered scan budget (session.py SPARK_GRAFT_MAX_PARTITION_BYTES,
-        # 8MB) yields fewer partitions than cores after the checkpoint read.
-        # The shuffle moves only MBs; the |pairs|-sized output never
-        # repartitions (a repartition at pair scale measurably dominates).
-        return candidate_pairs(
-            blocks,
-            broadcast_blocks=bcast_blocks,
-            dedupe=False,
-            spread_to=max(spark.sparkContext.defaultParallelism, n_blocks // 100_000),
-        )
-
     # The pair table is the largest intermediate (O(block_size x turns) rows
-    # of two short keys) and the scored stage is its only consumer.
-    # fuse_pairs (the default) skips its checkpoint and feeds the
-    # unmaterialized self-join plan straight into score_pairs_base: one full
-    # write+read of |pairs| rows disappears from the wall (measured 1.09x
-    # median at 8c/203M pairs, the 36-41 s candidate_pairs stage eliminated
-    # while the scored stage stays in its noise band; interleaved A/B)
-    # at the cost of resume granularity: a restart recomputes pairs inside
-    # the scored stage, and the extra work is just the block self-join.
-    # pairs_scored reporting is unaffected: it reads scored_pairs lineage.
-    if fuse_pairs:
-        pairs = build_pairs()
-        pipe.metrics["candidate_pairs"] = {"fused": True}
-    else:
-        pairs = pipe.stage("candidate_pairs", build_pairs)
+    # of two short keys) and the scored stage is its only consumer, so it is
+    # never checkpointed: the unmaterialized self-join feeds score_pairs_base
+    # directly, saving one write and read of |pairs| rows (1.09x median wall
+    # at 8 cores / 203M pairs). A resume of the scored stage recomputes the
+    # self-join. The streaming side gets a row-budget spread inside
+    # candidate_pairs: the block table dictionary-compresses to a few bytes
+    # per row, so its checkpoint scan yields fewer partitions than cores.
+    # Only the MB-sized block table moves; the pair stream never shuffles.
+    pairs = candidate_pairs(
+        blocks,
+        broadcast_blocks=bcast_blocks,
+        dedupe=False,
+        spread_to=max(spark.sparkContext.defaultParallelism, n_blocks // 100_000),
+    )
     features = turn_features(turns, mention_entities)
-    # Split scored plan: stage 1 is pure codegen (no ArrowEvalPython over
-    # |pairs|); stage 2 re-reads the checkpoint with a pushed
+    # Split scored plan: this stage is pure codegen (no ArrowEvalPython over
+    # |pairs|); jw_scores re-reads the checkpoint with a pushed
     # undecided=true filter and runs JW/Levenshtein on that slice only.
-    # Keep the JW kernel off the full pair table: the split costs nothing
-    # extra here because the stage checkpoints anyway.
-    # compact_scored (the default): of the O(pairs) scored rows, downstream
-    # only ever reads the shared-entity rows (decided match edges) and the
-    # undecided rows (the JW slice) — 0.2% of the mass on sparse-entity
-    # corpora (perfbench pair_heavy), about half on dense shared-entity
-    # cliques (0.44 on the sample corpus at scale 0.002). Writing the
-    # decided-nonmatch rows to the dominant checkpoint is dead I/O, so the
-    # stage filters to the live rows BEFORE the write. Both layouts count
-    # the full pair mass in the same job via Observation (no second pass;
-    # the counts are stage facts, so resume recovers them).
-    # Consumers needing the complete candidate-pair key set (the F1 audit)
-    # use result["pairs_all"] — the unmaterialized pair plan — instead of
-    # the scored checkpoint.
+    # Of the scored rows, downstream reads only the shared-entity rows
+    # (pairwise match edges) and the undecided rows (the JW slice): 0.2 % of
+    # the pair mass on sparse-entity corpora (perfbench pair_heavy), about
+    # half on dense shared-entity cliques. So the stage filters to those rows
+    # before the write, and counts the full pair mass in the same job via
+    # Observation (stage facts, so a resume recovers them). The F1 audit
+    # needs every candidate pair and reads result["pairs_all"] instead.
     obs = Observation("scored_pairs_full")
 
     def build_scored() -> DataFrame:
@@ -274,7 +256,7 @@ def run_er_pipeline(
             F.sum(F.col("undecided").cast("long")).alias("undecided_rows"),
             F.sum(F.col("shared_entity").cast("long")).alias("shared_rows"),
         )
-        return base.filter(F.col("shared_entity") | F.col("undecided")) if compact_scored else base
+        return base.filter(F.col("shared_entity") | F.col("undecided"))
 
     scored_base = pipe.stage(
         "scored_pairs", build_scored, facts=lambda _: {k: int(v or 0) for k, v in obs.get.items()}
@@ -283,27 +265,18 @@ def run_er_pipeline(
         "jw_scores",
         lambda: jw_scores_for_undecided(scored_base, features, broadcast_features=bcast_feats),
     )
-    # the slice is usually tiny; broadcast the join-back only when it fits
-    # (same 96 B/row hash-relation estimate as the block broadcast above)
-    n_jw = int((pipe.metrics.get("jw_scores") or {}).get("rows") or 0)
-    scored = finalize_scored(
-        scored_base,
-        jw_slice,
-        jw_threshold,
-        jaccard_threshold,
-        broadcast_jw=0 <= n_jw * 96 <= broadcast_block_bytes,
-    )
     cc_stats: Dict[str, object] = {}
-    # Edge source for clustering, chosen from lineage counts (both produce
-    # IDENTICAL components — parity-pinned by test_star_edges_cluster_parity):
-    # * pairwise — read the shared/undecided rows straight off the compact
-    #   scored checkpoint; cost ~ shared_rows. Right when entity cliques are
-    #   sparse (the 203M-pair synthetic corpus: 123k shared rows).
-    # * star — per-(block, entity) member->min edges re-derived from the
-    #   block table; cost ~ block rows, INDEPENDENT of how quadratic the
-    #   shared-pair mass is. Right when cliques are dense (the sample
-    #   corpus: 3.66M shared pairs from 0.43M block rows; at web scale a
-    #   hot entity makes shared_rows explode while block rows stay linear).
+    # Edge source for clustering, chosen from lineage counts; both give the
+    # same components (test_star_edges_cluster_parity):
+    # * pairwise — the shared/undecided rows of the scored checkpoint; cost
+    #   grows with shared_rows.
+    # * star — per-(block, entity) member->hub edges from the block table;
+    #   cost grows with block rows, however quadratic the shared-pair mass.
+    # Neither wins everywhere. Forcing star on every corpus (perfbench, 4
+    # vCPU, 5 interleaved pairs each) made dense_cliques 8.6 % faster end to end and
+    # pair_heavy 7.7 % slower: there entity_clusters went from 1.47 to
+    # 3.48 s, for 2,893 star rows against 2,269 pairwise rows, so the cost is
+    # the star build's extra jobs, not data. Pick by the two counts.
     n_shared = pipe.metrics["scored_pairs"]["shared_rows"]
     use_star = n_shared > n_blocks
 
@@ -326,11 +299,10 @@ def run_er_pipeline(
     pipe.metrics["clustering_convergence"] = pipe.metrics["entity_clusters"]["convergence"]
     # pairs_all: the complete candidate-pair key set, for consumers that
     # need every pair rather than the live scored rows (the F1 audit's
-    # labeled-pair denominator). Fused -> the lazy self-join plan (recomputed
-    # by the consumer, outside the timed window); checkpointed -> the table.
+    # labeled-pair denominator) — the lazy self-join plan, recomputed by
+    # the consumer outside the timed window.
     return {
         "clusters": clusters,
-        "scored": scored,
         "pairs_all": pairs.select("key_a", "key_b"),
         # the salted blocks checkpoint (stage 'blocks' — its own materialized
         # stage after the two-stage split, distinct from the raw construction

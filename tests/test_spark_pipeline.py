@@ -375,12 +375,25 @@ def test_star_edges_cluster_parity(spark, transcripts, tmp_path):
     (ids included — component minimum member) that the pairwise match-edge
     view produces: stars span each (block, entity) clique with the same
     transitive closure. Non-vacuous: the corpus must contain multi-member
-    groups (real sparsification) and similarity-only edges must survive."""
-    from pilsner_spark.operators.clustering import cluster_turns
-    from pilsner_spark.operators.scoring import split_match_edges
+    groups (real sparsification) and similarity-only edges must survive.
+    The cluster table itself is pinned by a golden fingerprint (perfbench's
+    cluster_fingerprint formula), and the scored checkpoint keeps only the
+    shared-entity and undecided rows of the full pair mass."""
+    from pilsner_spark.functions.text import md5_long
+    from pilsner_spark.operators.scoring import split_match_edges, star_shared_edges
 
     result = run_er_pipeline(spark, str(tmp_path / "work"), transcripts)
     catalog = result["pipeline"].catalog
+    fp = result["clusters"].agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(md5_long(F.concat_ws("\u0001", "turn_key", "cluster_id")).cast("decimal(38,0)")).alias("h"),
+    ).collect()[0]
+    assert f"{fp['n']}:{fp['h']}" == "1301:741283283273268890068"
+    m = result["metrics"]["scored_pairs"]
+    assert m["pairs_full"] == result["pairs_all"].count()
+    assert m["rows"] == m["shared_rows"] + m["undecided_rows"]  # disjoint by construction
+    assert 0 < m["rows"] < m["pairs_full"]
+
     turns = catalog.read("turns_normalized")
     pairwise_edges = split_match_edges(catalog.read("scored_pairs"), catalog.read("jw_scores"))
     star_clusters = {(r.turn_key, r.cluster_id) for r in result["clusters"].collect()}
@@ -390,14 +403,8 @@ def test_star_edges_cluster_parity(spark, transcripts, tmp_path):
     }
     assert star_clusters == pairwise_clusters
     # real sparsification happened: the star set is materially smaller
-    from pilsner_spark.operators.blocking import with_turn_key as _wtk
-    from pilsner_spark.operators.mentions import turn_entities_df
-    from pilsner_spark.operators.scoring import star_shared_edges
-
-    mentions = result["pipeline"].catalog.read("mentions")
-    ents = _wtk(turn_entities_df(mentions))
-    # star edges are a multiset (one row per shared block); count the set
-    n_star = star_shared_edges(result["blocks_salted"], ents).distinct().count()
+    # (star edges are a multiset, one row per shared block; count the set)
+    n_star = star_shared_edges(result["blocks_salted"], catalog.read("mentions")).distinct().count()
     n_pairwise = pairwise_edges.count()
     assert 0 < n_star < n_pairwise / 2
 
@@ -456,16 +463,17 @@ def test_er_pipeline_hard_negatives_earn_f1(spark, tmp_path):
 
     # baseline: edges from shared_entity alone — typo turns never link, so
     # recall collapses; proves JW/Jaccard + the conflict veto are load-bearing
+    catalog = result["pipeline"].catalog
     base_edges = (
-        result["scored"].filter(F.col("shared_entity")).select("key_a", "key_b").distinct()
+        catalog.read("scored_pairs").filter(F.col("shared_entity")).select("key_a", "key_b").distinct()
     )
     base_clusters = cluster_turns(with_turn_key(tr).select("turn_key"), base_edges)
     base = evaluate_f1(result["pairs_all"], base_clusters, tr)
     assert base["hard_slice"]["f1"] < 0.9, base
 
     # and the hard negatives must actually be hard: near-identical
-    # cross-entity pairs exist among the scored pairs (high jw, conflict)
-    hardneg = result["scored"].filter(
+    # cross-entity pairs exist in the JW slice (high jw, conflict)
+    hardneg = catalog.read("jw_scores").filter(
         F.col("conflicting_entities") & (F.col("jw") >= 0.92) & (F.col("jaccard") >= 0.6)
     )
     assert hardneg.count() > 0
@@ -505,14 +513,15 @@ def test_pipeline_resume(spark, transcripts, tmp_path):
     """Second run with identical params resumes every stage from checkpoint;
     a changed param invalidates downstream stages."""
     work = str(tmp_path / "resume")
-    # fuse_pairs=False: this test exercises the per-stage checkpoint/resume
-    # path, which includes the candidate_pairs checkpoint the fused default
-    # deliberately skips.
-    r1 = run_er_pipeline(spark, work, transcripts, fuse_pairs=False)
+    with pytest.raises(ValueError):
+        run_er_pipeline(spark, work, transcripts, fuse_pairs=False)
+    r1 = run_er_pipeline(spark, work, transcripts)
     assert all(not m.get("resumed", False) for m in r1["metrics"].values() if isinstance(m, dict) and "resumed" in m)
-    r2 = run_er_pipeline(spark, work, transcripts, fuse_pairs=False)
+    r2 = run_er_pipeline(spark, work, transcripts)
     resumed = [k for k, m in r2["metrics"].items() if isinstance(m, dict) and m.get("resumed")]
-    assert set(resumed) >= {"turns_normalized", "mentions", "blocks", "candidate_pairs", "scored_pairs", "entity_clusters"}
+    assert set(resumed) == {
+        "turns_normalized", "mentions", "blocks_raw", "blocks", "scored_pairs", "jw_scores", "entity_clusters",
+    }
     # stage facts come back from lineage: CC convergence, salted-key
     # counts and the scored-stage Observation counts
     assert r1["metrics"]["clustering_convergence"]["converged"] is True
@@ -522,61 +531,8 @@ def test_pipeline_resume(spark, transcripts, tmp_path):
     for k in ("pairs_full", "shared_rows", "undecided_rows"):
         assert r2["metrics"]["scored_pairs"][k] == r1["metrics"]["scored_pairs"][k] > 0, k
     # param change -> stages recompute
-    r3 = run_er_pipeline(spark, work, transcripts, jw_threshold=0.95, fuse_pairs=False)
+    r3 = run_er_pipeline(spark, work, transcripts, jw_threshold=0.95)
     assert not r3["metrics"]["scored_pairs"].get("resumed")
-
-
-def test_pipeline_fuse_pairs_parity(spark, transcripts, tmp_path):
-    """fuse_pairs=True skips the candidate-pair checkpoint but must produce
-    the identical scored table and cluster assignment — the fused plan feeds
-    the same self-join into score_pairs_base, only unmaterialized."""
-    r_ckpt = run_er_pipeline(spark, str(tmp_path / "ckpt"), transcripts, fuse_pairs=False)
-    r_fused = run_er_pipeline(spark, str(tmp_path / "fused"), transcripts, fuse_pairs=True)
-    assert r_fused["metrics"]["candidate_pairs"] == {"fused": True}
-    assert "candidate_pairs" not in [
-        p.name for p in (tmp_path / "fused").iterdir() if p.is_dir()
-    ]
-    cols = ["key_a", "key_b", "jaccard", "is_match"]
-    a = sorted(map(tuple, r_ckpt["scored"].select(*cols).distinct().collect()))
-    b = sorted(map(tuple, r_fused["scored"].select(*cols).distinct().collect()))
-    assert a == b and len(a) > 0
-    ca = sorted(map(tuple, r_ckpt["clusters"].collect()))
-    cb = sorted(map(tuple, r_fused["clusters"].collect()))
-    assert ca == cb
-
-
-def test_pipeline_compact_scored_parity(spark, transcripts, tmp_path):
-    """compact_scored (the default) drops decided-nonmatch rows from the
-    scored checkpoint but must leave every downstream product unchanged:
-    identical clusters, identical F1 over pairs_all, and a pairs_full
-    Observation count equal to the full layout's materialized row count."""
-    r_full = run_er_pipeline(spark, str(tmp_path / "full"), transcripts, compact_scored=False)
-    r_comp = run_er_pipeline(spark, str(tmp_path / "comp"), transcripts)
-    m = r_comp["metrics"]["scored_pairs"]
-    assert m["pairs_full"] == r_full["metrics"]["scored_pairs"]["rows"]
-    # the full layout observes the same counts and keeps every row
-    assert r_full["metrics"]["scored_pairs"]["pairs_full"] == r_full["metrics"]["scored_pairs"]["rows"]
-    for k in ("shared_rows", "undecided_rows"):
-        assert r_full["metrics"]["scored_pairs"][k] == m[k], k
-    # the decided-nonmatch majority really was dropped
-    assert 0 < m["rows"] < m["pairs_full"]
-    assert m["rows"] == m["undecided_rows"] + m["shared_rows"]  # disjoint by construction
-    # compact scored rows == full scored filtered to the live condition
-    live = F.col("shared_entity") | (~F.col("shared_entity") & (F.col("jaccard") >= 0.3))
-    a = sorted(map(tuple, r_full["scored"].filter(live).collect()))
-    b = sorted(map(tuple, r_comp["scored"].collect()))
-    assert a == b and len(b) > 0
-    assert sorted(map(tuple, r_full["clusters"].collect())) == sorted(
-        map(tuple, r_comp["clusters"].collect())
-    )
-    fa = evaluate_f1(r_full["pairs_all"], r_full["clusters"], transcripts)
-    fb = evaluate_f1(r_comp["pairs_all"], r_comp["clusters"], transcripts)
-    assert fa == fb and fb["labeled_pairs"] > 1000
-
-    # resume: the Observation counts round-trip through the lineage sidecar
-    r_res = run_er_pipeline(spark, str(tmp_path / "comp"), transcripts)
-    assert r_res["metrics"]["scored_pairs"]["resumed"]
-    assert r_res["metrics"]["scored_pairs"]["pairs_full"] == m["pairs_full"]
 
 
 def _rows_stage(spark, n: int):
@@ -629,8 +585,8 @@ def test_stage_failing_facts_leave_no_resumable_checkpoint(spark, tmp_path):
 def test_lineage_recorded(spark, transcripts, tmp_path):
     work = str(tmp_path / "lineage")
     result = run_er_pipeline(spark, work, transcripts)
-    # scored_pairs, not candidate_pairs: the fused default never
-    # materializes the pair table, so its lineage lives in the consumer.
+    # scored_pairs, not the pair table: the pipeline never materializes
+    # the candidate pairs, so their lineage lives in the consumer.
     lineage = result["pipeline"].catalog.lineage("scored_pairs")
     assert lineage["rows"] > 0
     assert len(lineage["partitions"]) >= 1
@@ -639,14 +595,14 @@ def test_lineage_recorded(spark, transcripts, tmp_path):
 
 
 def test_score_pairs_broadcast_and_shuffle_paths_agree(spark):
-    """The split scorer (set features -> undecided-slice JW/lev ->
-    join-back) must produce identical scores with broadcast feature joins
-    and with shuffle joins — including JW/lev on undecided near-duplicate
+    """The split scorer (set features -> undecided-slice JW/lev -> match
+    edges) must produce identical scores with broadcast feature joins and
+    with shuffle joins — including JW/lev on undecided near-duplicate
     pairs."""
     from pilsner_spark.operators.scoring import (
-        finalize_scored,
         jw_scores_for_undecided,
         score_pairs_base,
+        split_match_edges,
         turn_features,
     )
 
@@ -665,21 +621,27 @@ def test_score_pairs_broadcast_and_shuffle_paths_agree(spark):
         [("c1#0", "c2#0"), ("c1#0", "c3#0"), ("c1#0", "c4#0")], "key_a string, key_b string"
     )
 
-    def scored(broadcast: bool) -> dict:
+    def by_pair(df) -> dict:
+        return {(r.key_a, r.key_b): r for r in df.collect()}
+
+    def scored(broadcast: bool):
         base = score_pairs_base(pairs, feats, broadcast_features=broadcast)
         jw = jw_scores_for_undecided(base, feats, broadcast_features=broadcast)
-        return {(r["key_a"], r["key_b"]): r for r in finalize_scored(base, jw).collect()}
+        return by_pair(base), by_pair(jw), set(by_pair(split_match_edges(base, jw)))
 
-    out_b, out_s = scored(True), scored(False)
-    assert set(out_b) == set(out_s) == {("c1#0", "c2#0"), ("c1#0", "c3#0"), ("c1#0", "c4#0")}
-    for k in out_b:
-        for col in ("shared_entity", "jaccard", "lev_ratio", "jw", "is_match"):
-            assert out_b[k][col] == pytest.approx(out_s[k][col]), (k, col)
-    near = out_b[("c1#0", "c2#0")]
+    (base_b, jw_b, edges_b), (base_s, jw_s, edges_s) = scored(True), scored(False)
+    assert set(base_b) == set(base_s) == {("c1#0", "c2#0"), ("c1#0", "c3#0"), ("c1#0", "c4#0")}
+    assert set(jw_b) == set(jw_s) == {("c1#0", "c2#0"), ("c1#0", "c4#0")}  # c3 is decided
+    for k in base_b:
+        for col in ("shared_entity", "jaccard", "undecided"):
+            assert base_b[k][col] == pytest.approx(base_s[k][col]), (k, col)
+    for k in jw_b:
+        for col in ("lev_ratio", "jw"):
+            assert jw_b[k][col] == pytest.approx(jw_s[k][col]), (k, col)
+    near = jw_b[("c1#0", "c2#0")]
     assert 0.9 < near["jw"] < 1.0 and 0.9 < near["lev_ratio"] < 1.0  # JW/lev actually computed
-    assert near["is_match"]  # near-dup above both thresholds
-    assert out_b[("c1#0", "c4#0")]["is_match"]  # exact dup
-    assert not out_b[("c1#0", "c3#0")]["is_match"]
+    # near-dup above both thresholds and the exact dup match; c3 does not
+    assert edges_b == edges_s == {("c1#0", "c2#0"), ("c1#0", "c4#0")}
 
 
 def test_match_edges_dedupes_duplicate_pairs(spark):

@@ -103,8 +103,8 @@ CHECKS = {
         ],
         "avoid": [],
     },
-    # the split plan the PIPELINE actually runs (VERDICT r2 item 2):
-    # stage 1 = set features, pure codegen — NO Python node over |pairs|
+    # the set-feature scorer alone over a pair table: pure codegen — NO
+    # Python node over |pairs|
     "er_scored_base": {
         "want": [
             ("feature joins broadcast", r"BroadcastHashJoin"),
@@ -117,11 +117,12 @@ CHECKS = {
             ("no row-at-a-time Python", r"BatchEvalPython"),
         ],
     },
-    # the fused variant (run_er_pipeline's default): scored stage consumes the
-    # UNmaterialized block self-join. Budget: exactly one Exchange, the
-    # round-robin spread of the tiny block table (MBs); the |pairs|-sized
-    # stream goes scan -> broadcast self-join -> broadcast feature joins ->
-    # project without ever shuffling or entering Python.
+    # the plan the scored_pairs stage writes: the UNmaterialized block
+    # self-join -> set features -> the shared_entity | undecided filter.
+    # Budget: exactly one Exchange, the round-robin spread of the tiny block
+    # table (MBs); the |pairs|-sized stream goes scan -> broadcast self-join
+    # -> broadcast feature joins -> filter without ever shuffling or
+    # entering Python.
     "er_scored_fused": {
         "want": [
             ("block self-join + feature joins broadcast", r"BroadcastHashJoin"),
@@ -436,9 +437,9 @@ def _split_stage_dfs(spark):
     base = score_pairs_base(spark.read.parquet(f"{tmp}/pairs"), feats_ck, broadcast_features=True)
     base.write.mode("overwrite").parquet(f"{tmp}/base")
     base_ck = spark.read.parquet(f"{tmp}/base")
-    # fused stage: blocks come off their checkpoint, get the pipeline's
-    # row-budget spread, and the self-join stays unmaterialized under the
-    # feature joins (plans/pipeline.py fuse_pairs=True)
+    # the scored stage: blocks come off their checkpoint, get the
+    # pipeline's row-budget spread, and the self-join stays unmaterialized
+    # under the feature joins (plans/pipeline.py run_er_pipeline)
     fused_pairs = candidate_pairs(
         spark.read.parquet(f"{tmp}/blocks"),
         broadcast_blocks=True,
@@ -464,7 +465,9 @@ def _split_stage_dfs(spark):
         # returns the lazy local-finish plan over that checkpoint
         "er_cc_local": connected_components(star),
         "er_scored_base": base,
-        "er_scored_fused": score_pairs_base(fused_pairs, feats_ck, broadcast_features=True),
+        "er_scored_fused": score_pairs_base(fused_pairs, feats_ck, broadcast_features=True).filter(
+            F.col("shared_entity") | F.col("undecided")
+        ),
         "er_jw_slice": jw_slice,
         "er_audit": audit,
     }
