@@ -13,9 +13,9 @@ import argparse
 import json
 import os
 import time
-from typing import Callable, Dict, Optional, Sequence
+from typing import Callable, Dict, Optional, Tuple
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pilsner_spark.operators.blocking import (
@@ -45,6 +45,9 @@ from pilsner_spark.sources.synth import SAMPLE_PLANTS, pipeline_input, synth_tra
 
 # per-turn tables up to this many rows are broadcast into O(pairs) joins
 BROADCAST_ROW_LIMIT = 2_000_000
+# the audit's gold classes: the planted entity within one (tool, role)
+# keyspace, the scope of the blocking key, and the entity alone
+AUDIT_SCOPES = {"scoped": ("entity", "tool", "role"), "unscoped": ("entity",)}
 
 
 def default_model():
@@ -317,27 +320,38 @@ def run_er_pipeline(
 
 def audit_plan(
     pairs: DataFrame, clusters: DataFrame, truth: DataFrame, blocks: Optional[DataFrame] = None
-) -> DataFrame:
-    """The one-row aggregation behind :func:`evaluate_f1` (same arguments)."""
-    # the O(turns) side first: labeled truth x clusters, the hard-style flag
-    # (synth.py's hard slice) and the turn's token-family keys (every key
-    # but a band key, snm keys included); materialized once, joined twice
+) -> Tuple[DataFrame, DataFrame]:
+    """The two one-row aggregations behind :func:`evaluate_f1` (same
+    arguments), both over one materialized per-turn table: the pair
+    aggregation and the per-turn rollup."""
+    # the O(turns) side first: labeled truth turns with their (tool, role)
+    # keyspace, the hard-style flag (synth.py's hard slice), their cluster
+    # and the turn's token-family keys (every key but a band key, snm keys
+    # included)
     styled = "plant_style" in truth.columns
     hard = F.col("plant_style").isin("typo", "typo_clean", "hard_neg") if styled else F.lit(False)
     per_turn = (
         with_turn_key(truth)
         .filter(F.col("planted_entity").isNotNull())
-        .select("turn_key", F.col("planted_entity").alias("entity"), F.coalesce(hard, F.lit(False)).alias("hard"))
-        .join(clusters.select("turn_key", F.col("cluster_id").alias("cluster")), "turn_key")
+        .select(
+            "turn_key", F.col("planted_entity").alias("entity"), "tool", "role",
+            F.coalesce(hard, F.lit(False)).alias("hard"),
+        )
+        .join(clusters.select("turn_key", F.col("cluster_id").alias("cluster")), "turn_key", "left")
+        .withColumn("cluster", F.coalesce("cluster", F.concat(F.lit("singleton#"), "turn_key")))
     )
+    pair_cols = ["turn_key", "entity", "hard", "cluster"]
     if blocks is not None:
         keys = blocks.filter(~is_band_key()).groupBy("turn_key").agg(F.collect_set("block_key").alias("token_keys"))
         per_turn = per_turn.join(keys, "turn_key", "left")
-    per_turn = per_turn.localCheckpoint()
-    bcast = per_turn.count() <= BROADCAST_ROW_LIMIT
+        pair_cols.append("token_keys")
+    # the checkpoint job also counts the rows for the broadcast gate
+    obs = Observation("audit_turns")
+    per_turn = per_turn.observe(obs, F.count(F.lit(1)).alias("rows")).localCheckpoint()
+    bcast = obs.get["rows"] <= BROADCAST_ROW_LIMIT
 
     def side(s: str) -> DataFrame:
-        df = per_turn.select(*[F.col(c).alias(f"key_{s}" if c == "turn_key" else f"{c}_{s}") for c in per_turn.columns])
+        df = per_turn.select(*[F.col(c).alias(f"key_{s}" if c == "turn_key" else f"{c}_{s}") for c in pair_cols])
         return F.broadcast(df) if bcast else df
 
     labeled = F.col("entity_a").isNotNull() & F.col("entity_b").isNotNull()
@@ -353,26 +367,76 @@ def audit_plan(
         aggs.append(F.count_if(labeled & same & overlap).alias("token_pairs_caught"))
     # the pair distinct is the plan's only pair-sized shuffle
     pairs = pairs.select("key_a", "key_b").distinct()
-    return pairs.join(side("a"), "key_a", "left").join(side("b"), "key_b", "left").agg(*aggs)
+    pair_agg = pairs.join(side("a"), "key_a", "left").join(side("b"), "key_b", "left").agg(*aggs)
+
+    # per labeled turn, the sizes of the groups it belongs to; every rollup
+    # number is a sum of per-turn terms: B-cubed precision / recall masses
+    # n(c,g)/n(c) and n(c,g)/n(g), and 2 C(g,2) = sum over g's turns of n(g)-1
+    def size(*cols: str):
+        return F.count(F.lit(1)).over(Window.partitionBy(*cols))
+
+    sizes = per_turn.select(
+        size("cluster").alias("c"),
+        *[size("cluster", *g).alias(f"{s}_cg") for s, g in AUDIT_SCOPES.items()],
+        *[size(*g).alias(f"{s}_g") for s, g in AUDIT_SCOPES.items()],
+    )
+    rollup = sizes.agg(
+        F.count(F.lit(1)).alias("items"),
+        *[
+            agg
+            for s in AUDIT_SCOPES
+            for agg in (
+                F.sum(F.col(f"{s}_cg") / F.col("c")).alias(f"{s}_p_mass"),
+                F.sum(F.col(f"{s}_cg") / F.col(f"{s}_g")).alias(f"{s}_r_mass"),
+                F.sum(F.col(f"{s}_g") - 1).alias(f"{s}_true_pairs_x2"),
+                F.sum(F.col(f"{s}_cg") - 1).alias(f"{s}_clustered_pairs_x2"),
+            )
+        ],
+    )
+    return pair_agg, rollup
 
 
 def evaluate_f1(
     pairs: DataFrame, clusters: DataFrame, truth: DataFrame, blocks: Optional[DataFrame] = None
 ) -> Dict[str, object]:
-    """The audit pass, one aggregation job. Pairwise F1 on labeled pairs
-    *at the same blocking key*: the distinct candidate pairs whose two
-    turns both carry planted ground truth (FIXTURES.md §5); a pair is
-    predicted positive when the two turns land in the same cluster.
+    """The quality report of one ER run, from one per-turn table and two
+    aggregation jobs over it (:func:`audit_plan`).
 
-    ``pairs`` carries the complete candidate-pair key set as (key_a,
-    key_b) — pass ``result["pairs_all"]``, NOT the compact scored
-    checkpoint, which drops the decided-nonmatch pairs (the fn count).
-    The report adds ``distinct_pairs``, and, when the corpus carries
-    ``plant_style``, a ``hard_slice`` sub-report over the labeled pairs
-    with a typo / typo_clean / hard_neg side. With ``blocks`` (the salted
-    block table), ``token_pairs_caught`` counts the same-entity labeled
-    pairs sharing a token-family key: :func:`blocking_recall`'s input."""
-    row = audit_plan(pairs, clusters, truth, blocks).collect()[0]
+    The items are the labeled truth turns (``planted_entity`` set); ``truth``
+    also carries ``tool`` and ``role``. A labeled turn that no cluster holds
+    counts as its own singleton (``singleton#<turn_key>``).
+
+    * Pairwise F1 on labeled pairs *at the same blocking key*: the distinct
+      candidate pairs whose two turns are both labeled (FIXTURES.md §5); a
+      pair is predicted positive when the two turns share a cluster. Keys
+      tp / fp / fn / labeled_pairs / precision / recall / f1, plus
+      ``distinct_pairs``. ``pairs`` carries the complete candidate-pair key
+      set as (key_a, key_b) — pass ``result["pairs_all"]``, NOT the compact
+      scored checkpoint, which drops the decided-nonmatch pairs (the fn
+      count). When the corpus carries ``plant_style``, ``hard_slice`` is the
+      same report over the labeled pairs with a typo / typo_clean /
+      hard_neg side.
+    * ``bcubed``: B-cubed precision / recall / f1 and ``items`` (Bagga &
+      Baldwin '98; Amigó et al. '09), the means over items of
+      n(cluster, gold) / n(cluster) and n(cluster, gold) / n(gold), where
+      cluster sizes count labeled items only. ``scoped`` takes the gold
+      class as entity x tool x role (same-entity turns in different
+      keyspaces are correctly apart, since the blocking key includes the
+      keyspace); ``unscoped`` as the entity alone.
+    * ``blocking_recall``: the fraction of all true pairs that blocking put
+      among the candidates (``true_pairs_blocked`` = tp + fn), against the
+      same-keyspace true pairs (``recall``) and against all same-entity
+      pairs (``recall_unscoped``). The denominators are sums of C(g, 2)
+      over group sizes. ``cluster_recall`` / ``cluster_recall_unscoped``
+      are the fractions of true pairs that end up in one cluster; it can
+      exceed blocking recall, because clustering is transitive.
+
+    With ``blocks`` (the salted block table), ``token_pairs_caught`` counts
+    the same-entity labeled pairs that share a token-family key, and
+    ``blocking_recall`` adds ``token_key_recall`` and
+    ``band_key_recall_gain`` (what the MinHash band keys add on top)."""
+    pair_agg, rollup = audit_plan(pairs, clusters, truth, blocks)
+    row, turns = pair_agg.collect()[0], rollup.collect()[0]
 
     def report(prefix: str) -> Dict[str, object]:
         tp, fp, fn, n = (int(row[prefix + k]) for k in ("tp", "fp", "fn", "labeled"))
@@ -402,128 +466,37 @@ def evaluate_f1(
     out = {**report(""), "distinct_pairs": int(row["distinct_pairs"])}
     if "plant_style" in truth.columns:
         out["hard_slice"] = report("hard_")
+
+    items = int(turns["items"])
+
+    def bcubed(s: str) -> Dict[str, object]:
+        if not items:
+            return {"precision": 1.0, "recall": 1.0, "f1": 1.0, "items": 0}
+        p, r = turns[f"{s}_p_mass"] / items, turns[f"{s}_r_mass"] / items
+        f1 = 2 * p * r / (p + r) if p + r else 0.0
+        return {"precision": round(p, 6), "recall": round(r, 6), "f1": round(f1, 6), "items": items}
+
+    def ratio(num: int, den: int) -> float:
+        return round(num / den, 6) if den else 1.0
+
+    out["bcubed"] = {s: bcubed(s) for s in AUDIT_SCOPES}
+    scoped, total = (int(turns[f"{s}_true_pairs_x2"] or 0) // 2 for s in AUDIT_SCOPES)
+    got_scoped, got_all = (int(turns[f"{s}_clustered_pairs_x2"] or 0) // 2 for s in AUDIT_SCOPES)
+    blocked = out["tp"] + out["fn"]
+    recall: Dict[str, object] = {
+        "true_pairs_total": total,
+        "true_pairs_same_keyspace": scoped,
+        "true_pairs_blocked": blocked,
+        "recall": ratio(blocked, scoped),
+        "recall_unscoped": ratio(blocked, total),
+    }
     if blocks is not None:
         out["token_pairs_caught"] = int(row["token_pairs_caught"])
-    return out
-
-
-def bcubed(clusters: DataFrame, truth: DataFrame, scope_cols: Sequence[str] = ()) -> Dict[str, float]:
-    """B-cubed precision/recall/F1 of the cluster assignment against the
-    planted entities (Bagga & Baldwin '98; Amigó et al. '09 — the standard
-    cluster-level ER metric, complementing the pairwise F1: pairwise F1 is
-    blind to how errors distribute across clusters, B-cubed charges each
-    item for the purity/completeness of ITS cluster).
-
-    Per labeled item i: precision(i) = |same-entity items in i's cluster| /
-    |i's cluster|, recall(i) = same numerator / |i's entity|; scores are the
-    item means. Closed-form over the (cluster, entity) contingency cells —
-    sum of n_ce^2 / n_c (resp. n_e) — so the whole metric is two hash
-    aggregations and one broadcast-sized join: no per-item pair expansion,
-    linear at any corpus size. Cluster sizes count labeled items only
-    (unlabeled filler turns have no gold class to be right or wrong about);
-    a labeled item that never reached a cluster (no mention extracted)
-    counts as its own singleton rather than being silently dropped.
-
-    ``scope_cols`` refines the gold class to (entity, *scope_cols) — pass
-    ("tool", "role") for the rule-aligned universe, where same-entity turns
-    in different (tool, role) keyspaces are CORRECTLY apart (the blocking
-    key structurally scopes clusters, per the north rule); without it the
-    metric is unconditional, the B-cubed mirror of
-    ``cluster_recall_unscoped``."""
-    gold = F.concat_ws("\x01", F.col("planted_entity"), *[F.col(c) for c in scope_cols])
-    labeled = (
-        with_turn_key(truth)
-        .filter(F.col("planted_entity").isNotNull())
-        .select("turn_key", gold.alias("entity"))
-        .join(clusters.select("turn_key", "cluster_id"), "turn_key", "left")
-        .withColumn(
-            "cluster_id",
-            F.coalesce(F.col("cluster_id"), F.concat(F.lit("singleton#"), F.col("turn_key"))),
-        )
-    )
-    cells = labeled.groupBy("cluster_id", "entity").agg(F.count(F.lit(1)).alias("n_ce"))
-    csize = cells.groupBy("cluster_id").agg(F.sum("n_ce").alias("n_c"))
-    esize = cells.groupBy("entity").agg(F.sum("n_ce").alias("n_e"))
-    row = (
-        cells.join(csize, "cluster_id")
-        .join(esize, "entity")
-        .agg(
-            F.sum(F.col("n_ce") * F.col("n_ce") / F.col("n_c")).alias("p_mass"),
-            F.sum(F.col("n_ce") * F.col("n_ce") / F.col("n_e")).alias("r_mass"),
-            F.sum("n_ce").alias("n"),
-        )
-        .collect()[0]
-    )
-    n = row["n"] or 0
-    if not n:
-        return {"precision": 1.0, "recall": 1.0, "f1": 1.0, "items": 0}
-    p, r = row["p_mass"] / n, row["r_mass"] / n
-    f1 = 2 * p * r / (p + r) if p + r else 0.0
-    return {"precision": round(p, 6), "recall": round(r, 6), "f1": round(f1, 6), "items": int(n)}
-
-
-def blocking_recall(
-    truth: DataFrame,
-    caught_true_pairs: int,
-    caught_token_pairs: Optional[int] = None,
-    clusters: Optional[DataFrame] = None,
-) -> Dict[str, object]:
-    """Fraction of ALL ground-truth positive pairs that blocking put into
-    the candidate table (north_rule audit): every fn/tp count in the F1
-    report is conditional on the pair having been blocked together, so a
-    true pair blocking misses is invisible there — this report makes that
-    loss explicit (fn=0 claims stop being conditional on blocking luck).
-
-    ``caught_true_pairs`` = tp + fn from :func:`evaluate_f1` (same-entity
-    labeled pairs present among candidates). Denominators are analytic —
-    sums of C(g, 2) over group sizes — and the numerators come from the
-    audit pass, so this runs no pair-level job. Two universes are reported
-    because the north rule's key structurally includes (tool, role):
-
-    * ``recall`` — against same-entity pairs WITH the same (tool, role):
-      the rule-scoped number, isolating genuine blocking luck (token
-      overlap, DF caps, salting, band bucketing) from the deliberate key
-      structure;
-    * ``recall_unscoped`` — against ALL same-entity pairs, quantifying
-      what the (tool, role) key constraint itself excludes.
-
-    ``caught_token_pairs`` = evaluate_f1's ``token_pairs_caught`` splits
-    the recall by key family (``token_key_recall``; the band keys add
-    ``band_key_recall_gain`` on top). With ``clusters``, ``cluster_recall``
-    / ``cluster_recall_unscoped`` report the fraction of true pairs that
-    END UP in the same cluster — the unconditional end-to-end number:
-    transitive clustering can recover pairs blocking never compared (two
-    surfaces of one entity with disjoint tokens merge through any chain of
-    matched intermediates), so this can exceed blocking recall; both
-    numerators stay analytic (C(g,2) over (cluster, entity) group sizes)."""
-    t = with_turn_key(truth).filter(F.col("planted_entity").isNotNull()).select(
-        "turn_key", "planted_entity", "tool", "role"
-    )
-
-    def pair_total(df: DataFrame, group_cols) -> int:
-        """Sum of C(g, 2) over the group sizes of ``df`` by ``group_cols``."""
-        sizes = df.groupBy(*group_cols).agg(F.count("*").alias("g"))
-        row = sizes.agg(F.sum((F.col("g") * (F.col("g") - 1) / 2).cast("long")).alias("n")).collect()[0]
-        return int(row["n"] or 0)
-
-    total_scoped = pair_total(t, ["planted_entity", "tool", "role"])
-    total_all = pair_total(t, ["planted_entity"])
-    out: Dict[str, object] = {
-        "true_pairs_total": total_all,
-        "true_pairs_same_keyspace": total_scoped,
-        "true_pairs_blocked": int(caught_true_pairs),
-        "recall": round(caught_true_pairs / total_scoped, 6) if total_scoped else 1.0,
-        "recall_unscoped": round(caught_true_pairs / total_all, 6) if total_all else 1.0,
-    }
-    if caught_token_pairs is not None:
-        out["token_key_recall"] = round(caught_token_pairs / total_scoped, 6) if total_scoped else 1.0
-        out["band_key_recall_gain"] = round(out["recall"] - out["token_key_recall"], 6)
-    if clusters is not None:
-        tc = t.join(clusters.select("turn_key", "cluster_id"), "turn_key")
-        got_scoped = pair_total(tc, ["cluster_id", "planted_entity", "tool", "role"])
-        got_all = pair_total(tc, ["cluster_id", "planted_entity"])
-        out["cluster_recall"] = round(got_scoped / total_scoped, 6) if total_scoped else 1.0
-        out["cluster_recall_unscoped"] = round(got_all / total_all, 6) if total_all else 1.0
+        recall["token_key_recall"] = ratio(out["token_pairs_caught"], scoped)
+        recall["band_key_recall_gain"] = round(recall["recall"] - recall["token_key_recall"], 6)
+    recall["cluster_recall"] = ratio(got_scoped, scoped)
+    recall["cluster_recall_unscoped"] = ratio(got_all, total)
+    out["blocking_recall"] = recall
     return out
 
 
@@ -603,19 +576,10 @@ def main() -> None:
     # a resumed stage did none of its work in this window: no throughput
     resumed = [k for k, v in result["metrics"].items() if isinstance(v, dict) and v.get("resumed")]
     eval_start = time.time()
-    scores, recall_report = {}, None
+    scores = {}
     if not args.skip_eval:
         scores = evaluate_f1(result["pairs_all"], result["clusters"], transcripts, blocks=result["blocks_salted"])
-        scores["bcubed"] = {
-            "scoped": bcubed(result["clusters"], transcripts, scope_cols=("tool", "role")),
-            "unscoped": bcubed(result["clusters"], transcripts),
-        }
-        recall_report = blocking_recall(
-            transcripts,
-            caught_true_pairs=scores["tp"] + scores["fn"],
-            caught_token_pairs=scores.pop("token_pairs_caught"),
-            clusters=result["clusters"],
-        )
+        del scores["token_pairs_caught"]  # reported as blocking_recall.token_key_recall
     eval_wall = time.time() - eval_start
     report = {
         "n_convs": n_convs,
@@ -625,7 +589,6 @@ def main() -> None:
         "pairs_per_second": None if resumed else round(n_pairs / wall, 1),
         "resumed_stages": resumed,
         "f1_eval_seconds": round(eval_wall, 2),
-        **({"blocking_recall": recall_report} if recall_report is not None else {}),
         **scores,
         # every scalar of every metrics entry; nested values (params,
         # per-partition rows) stay in the lineage sidecars

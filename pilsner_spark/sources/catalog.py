@@ -18,6 +18,7 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import shutil
 import time
 from dataclasses import dataclass
 from typing import Callable, Optional
@@ -59,17 +60,20 @@ class Catalog:
         facts: Optional[Callable[[DataFrame], dict]] = None,
     ) -> dict:
         """Materialize a stage output and commit its lineage; returns the
-        lineage. The sidecar goes first and comes back last, so a write,
-        or a ``facts`` call, that fails or is killed leaves no sidecar and
-        the next run recomputes. ``facts(out)`` runs on the written table
-        after the write job (Observation values are ready) and its dict is
-        merged into the lineage."""
+        lineage. The sidecar goes before the table is replaced and comes
+        back last, so a swap, or a ``facts`` call, that fails or is killed
+        leaves no sidecar and the next run recomputes. On the Parquet path
+        the data is written to a staging directory first and swapped in
+        only after that write succeeded: a failed write leaves the previous
+        table and its sidecar as they were. ``facts(out)`` runs on the
+        written table after the write job (Observation values are ready)
+        and its dict is merged into the lineage."""
         start = time.time()
         lineage_path = self._lineage_path(table)
-        if os.path.exists(lineage_path):
-            os.remove(lineage_path)
         path = self._path(table)
         if self.use_iceberg:
+            if os.path.exists(lineage_path):
+                os.remove(lineage_path)
             df.writeTo(table).createOrReplace()
             out = self.read(table)
             per_partition = [
@@ -81,7 +85,16 @@ class Catalog:
                 .collect()
             ]
         else:
-            df.write.mode("overwrite").parquet(path)
+            staging = os.path.join(self.root, f"{table}._staging")
+            try:
+                df.write.mode("overwrite").parquet(staging)
+            except BaseException:
+                shutil.rmtree(staging, ignore_errors=True)
+                raise
+            if os.path.exists(lineage_path):
+                os.remove(lineage_path)
+            shutil.rmtree(path, ignore_errors=True)
+            os.rename(staging, path)
             out = self.read(table)
             # per-partition lineage from parquet footers (file metadata) —
             # what an Iceberg snapshot's manifest carries; zero extra scan

@@ -24,6 +24,13 @@ def transcripts(spark):
     return synth_transcripts(spark, n_convs=120, seed=42).localCheckpoint()
 
 
+@pytest.fixture(scope="module")
+def er_run(spark, transcripts, tmp_path_factory):
+    """One cold default run over ``transcripts``; the tests that use it only
+    read its result and checkpoints."""
+    return run_er_pipeline(spark, str(tmp_path_factory.mktemp("er_run")), transcripts)
+
+
 def test_synth_schema_and_determinism(spark, transcripts):
     assert [f.name for f in transcripts.schema.fields] == [
         "conv_id", "turn_idx", "role", "text", "tool", "ts", "planted_entity", "planted_label", "plant_style",
@@ -243,22 +250,24 @@ def test_bcubed_hand_computed(spark):
     """6 labeled items, clusters {a,b,c} / {d,e}, f unclustered (counts as
     its own singleton): gold a,b=E1; c,d=E2; e,f=E3.
     p_mass = 4/3+1/3+1/2+1/2+1 = 11/3 -> P = 11/18
-    r_mass = 4/2+1/2+1/2+1/2+1/2 = 4   -> R = 2/3, F1 = 44/69."""
-    from pilsner_spark.plans.pipeline import bcubed
-
+    r_mass = 4/2+1/2+1/2+1/2+1/2 = 4   -> R = 2/3, F1 = 44/69.
+    One (tool, role) keyspace, so the scoped report equals the unscoped."""
     truth = spark.createDataFrame(
-        [(c, 0, e) for c, e in [("a", "E1"), ("b", "E1"), ("c", "E2"), ("d", "E2"), ("e", "E3"), ("f", "E3")]],
-        "conv_id string, turn_idx int, planted_entity string",
+        [(c, 0, e, "t", "user") for c, e in [("a", "E1"), ("b", "E1"), ("c", "E2"), ("d", "E2"), ("e", "E3"), ("f", "E3")]],
+        "conv_id string, turn_idx int, planted_entity string, tool string, role string",
     )
     clusters = spark.createDataFrame(
         [("a#0", "cl1"), ("b#0", "cl1"), ("c#0", "cl1"), ("d#0", "cl2"), ("e#0", "cl2")],
         "turn_key string, cluster_id string",
     )
-    got = bcubed(clusters, truth)
-    assert got["items"] == 6
-    assert got["precision"] == round(11 / 18, 6)
-    assert got["recall"] == round(2 / 3, 6)
-    assert got["f1"] == round(44 / 69, 6)
+    pairs = spark.createDataFrame([], "key_a string, key_b string")
+    report = evaluate_f1(pairs, clusters, truth)["bcubed"]
+    for scope in ("scoped", "unscoped"):
+        got = report[scope]
+        assert got["items"] == 6
+        assert got["precision"] == round(11 / 18, 6)
+        assert got["recall"] == round(2 / 3, 6)
+        assert got["f1"] == round(44 / 69, 6)
 
 
 def test_audit_hand_computed(spark):
@@ -269,8 +278,6 @@ def test_audit_hand_computed(spark):
     c-u, d-e one token key each. Clusters {a,b,c} {d,e} {f} {g} {u}:
     tp a-b, a-c; fp d-e; fn f-g; c-u unlabeled; b-c never blocked.
     Hard slice (a hard side): a-c tp, d-e fp, f-g fn."""
-    from pilsner_spark.plans.pipeline import blocking_recall
-
     gold = [("a", "E1", None), ("b", "E1", None), ("c", "E1", "typo_clean"), ("d", "E2", "hard_neg"),
             ("e", "E3", None), ("f", "E4", None), ("g", "E4", "typo"), ("u", None, None)]
     truth = spark.createDataFrame(
@@ -295,10 +302,11 @@ def test_audit_hand_computed(spark):
     hs = got["hard_slice"]
     assert (hs["tp"], hs["fp"], hs["fn"], hs["labeled_pairs"], hs["f1"]) == (1, 1, 1, 3, 0.5)
     assert got["token_pairs_caught"] == 2  # a-b and f-g
-    assert "token_pairs_caught" not in evaluate_f1(pairs, clusters, truth)
+    plain = evaluate_f1(pairs, clusters, truth)
+    assert "token_pairs_caught" not in plain and "token_key_recall" not in plain["blocking_recall"]
 
     # true pairs in one (tool, role): E1 C(3,2) + E4 C(2,2) = 4
-    br = blocking_recall(truth, got["tp"] + got["fn"], caught_token_pairs=got["token_pairs_caught"], clusters=clusters)
+    br = got["blocking_recall"]
     assert (br["true_pairs_same_keyspace"], br["recall"]) == (4, 0.75)
     assert (br["token_key_recall"], br["band_key_recall_gain"]) == (0.5, 0.25)
     assert br["cluster_recall"] == 0.75
@@ -357,11 +365,11 @@ def test_snm_blocks_pair_equivalence(spark):
     assert all(keyspace[a] == keyspace[b] for a, b in (tuple(p) for p in got))
 
 
-def test_er_pipeline_snm_window_f1(spark, transcripts, tmp_path):
+def test_er_pipeline_snm_window_f1(spark, transcripts, er_run, tmp_path):
     """With the sorted-neighborhood block family unioned in, the pipeline
     still earns F1 = 1.0 and scores at least as many candidate pairs (the
     extra family only ADDS candidates; the scorer decides them)."""
-    base = run_er_pipeline(spark, str(tmp_path / "base"), transcripts)
+    base = er_run
     snm = run_er_pipeline(spark, str(tmp_path / "snm"), transcripts, snm_window=4)
     n_base = int(base["metrics"]["scored_pairs"]["pairs_full"])
     n_snm = int(snm["metrics"]["scored_pairs"]["pairs_full"])
@@ -370,7 +378,7 @@ def test_er_pipeline_snm_window_f1(spark, transcripts, tmp_path):
     assert scores["f1"] >= 0.99, scores
 
 
-def test_star_edges_cluster_parity(spark, transcripts, tmp_path):
+def test_star_edges_cluster_parity(spark, er_run):
     """The star-sparsified edge set must produce the EXACT cluster table
     (ids included — component minimum member) that the pairwise match-edge
     view produces: stars span each (block, entity) clique with the same
@@ -382,7 +390,7 @@ def test_star_edges_cluster_parity(spark, transcripts, tmp_path):
     from pilsner_spark.functions.text import md5_long
     from pilsner_spark.operators.scoring import split_match_edges, star_shared_edges
 
-    result = run_er_pipeline(spark, str(tmp_path / "work"), transcripts)
+    result = er_run
     catalog = result["pipeline"].catalog
     fp = result["clusters"].agg(
         F.count(F.lit(1)).alias("n"),
@@ -409,10 +417,10 @@ def test_star_edges_cluster_parity(spark, transcripts, tmp_path):
     assert 0 < n_star < n_pairwise / 2
 
 
-def test_er_pipeline_f1_gate(spark, transcripts, tmp_path):
+def test_er_pipeline_f1_gate(spark, transcripts, er_run):
     """The BASELINE.json gate: pairwise F1 >= 0.99 on labeled pairs at the
     same blocking key, sample-dictionary entity assignments as truth."""
-    result = run_er_pipeline(spark, str(tmp_path / "work"), transcripts)
+    result = er_run
     scores = evaluate_f1(result["pairs_all"], result["clusters"], transcripts, blocks=result["blocks_salted"])
     assert scores["distinct_pairs"] == result["pairs_all"].distinct().count()
     assert scores["labeled_pairs"] > 1000
@@ -428,14 +436,7 @@ def test_er_pipeline_f1_gate(spark, transcripts, tmp_path):
 
     # blocking recall audit (VERDICT r2 item 4): fn=0 above is conditional
     # on a pair having been blocked together — this measures that condition.
-    from pilsner_spark.plans.pipeline import blocking_recall
-
-    br = blocking_recall(
-        transcripts,
-        caught_true_pairs=scores["tp"] + scores["fn"],
-        caught_token_pairs=scores["token_pairs_caught"],
-        clusters=result["clusters"],
-    )
+    br = scores["blocking_recall"]
     assert 0 < br["true_pairs_blocked"] <= br["true_pairs_same_keyspace"] <= br["true_pairs_total"]
     # the audit's raison d'être: blocking recall is NOT total on this corpus
     # (same-entity surfaces 'it' vs 'awesome white refrigerator' share no
@@ -541,9 +542,10 @@ def _rows_stage(spark, n: int):
 
 def test_stage_failed_recompute_does_not_resume_stale_sidecar(spark, tmp_path):
     """A stage written with p1, then recomputed with p2 by a plan that fails
-    inside the write job, must recompute on the next p1 call: the p2 write
-    has already overwritten the p1 data, so a p1 sidecar left in place
-    would resume onto a missing table."""
+    inside the write job, keeps the p1 checkpoint: the p2 data goes to a
+    staging directory that replaces the table only after the write
+    succeeded, so the next p1 call resumes onto the intact p1 table and no
+    staging directory is left behind."""
     work = str(tmp_path / "stale")
     assert Pipeline(spark, work, {"p": 1}).stage("t", _rows_stage(spark, 3)).count() == 3
 
@@ -555,8 +557,9 @@ def test_stage_failed_recompute_does_not_resume_stale_sidecar(spark, tmp_path):
         Pipeline(spark, work, {"p": 2}).stage("t", failing)
     pipe = Pipeline(spark, work, {"p": 1})
     out = pipe.stage("t", _rows_stage(spark, 3))
-    assert pipe.metrics["t"]["resumed"] is False
+    assert pipe.metrics["t"]["resumed"] is True
     assert sorted(r.x for r in out.collect()) == [0, 1, 2]
+    assert sorted(os.listdir(work)) == ["t", "t._lineage.json"]
 
 
 def test_stage_failing_facts_leave_no_resumable_checkpoint(spark, tmp_path):
@@ -582,9 +585,8 @@ def test_stage_failing_facts_leave_no_resumable_checkpoint(spark, tmp_path):
     assert resumed.metrics["t"]["resumed"] is True and resumed.metrics["t"]["n"] == 3
 
 
-def test_lineage_recorded(spark, transcripts, tmp_path):
-    work = str(tmp_path / "lineage")
-    result = run_er_pipeline(spark, work, transcripts)
+def test_lineage_recorded(er_run):
+    result = er_run
     # scored_pairs, not the pair table: the pipeline never materializes
     # the candidate pairs, so their lineage lives in the consumer.
     lineage = result["pipeline"].catalog.lineage("scored_pairs")

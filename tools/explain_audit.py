@@ -21,6 +21,7 @@ import io
 import os
 import re
 import sys
+import tempfile
 from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -397,10 +398,9 @@ CHECKS = {
 }
 
 
-def _split_stage_dfs(spark):
-    """Materialized inputs for the split-plan audits (built once)."""
-    import tempfile
-
+def _split_stage_dfs(spark, root: str):
+    """Materialized inputs for the split-plan audits (built once, under
+    ``root``)."""
     from pyspark.sql import functions as F
 
     from pilsner_spark.operators.blocking import (
@@ -425,7 +425,7 @@ def _split_stage_dfs(spark):
     tr = synth_transcripts(spark, n_convs=60, seed=42).localCheckpoint()
     turns = with_turn_key(normalized_text_df(pipeline_input(tr), model))
     blocks, _ = salt_oversized_blocks(token_blocks(turns), 400, 16)
-    tmp = tempfile.mkdtemp(prefix="plan_audit_split_")
+    tmp = os.path.join(root, "split")
     blocks.write.mode("overwrite").parquet(f"{tmp}/blocks")
     candidate_pairs(blocks, dedupe=False).write.mode("overwrite").parquet(f"{tmp}/pairs")
     ents = with_turn_key(turn_entities_df(extract_mentions_df(tr, model)))
@@ -455,8 +455,9 @@ def _split_stage_dfs(spark):
     )
     cluster_turns(turns, star).write.mode("overwrite").parquet(f"{tmp}/clusters")
     # the pipeline CLI's audit call: the lazy fused pair plan, clusters and
-    # salted blocks off their checkpoints
-    audit = audit_plan(
+    # salted blocks off their checkpoints (the pair aggregation; the per-turn
+    # rollup reads only the per-turn table)
+    audit, _ = audit_plan(
         fused_pairs, spark.read.parquet(f"{tmp}/clusters"), tr, spark.read.parquet(f"{tmp}/blocks")
     )
     return {
@@ -477,27 +478,25 @@ _SPLIT_CACHE = {}
 
 
 def _split(name):
-    def build(spark):
+    def build(spark, root):
         if not _SPLIT_CACHE:
-            _SPLIT_CACHE.update(_split_stage_dfs(spark))
+            _SPLIT_CACHE.update(_split_stage_dfs(spark, root))
         return _SPLIT_CACHE[name]
 
     return build
 
 
-def _ann_served_df(spark):
+def _ann_served_df(spark, root: str):
     """The IVF-PQ serving shape: index/centroids/codebooks persisted, raw
     vectors absent (vectors=None). Query vectors are renamed q_embedding so
     any bare 'embedding' column in the plan would be a full-width corpus
     leak."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from pilsner_spark.operators.ann import ivf_pq_topk, pq_codebooks, pq_index, sample_centroids
 
     emb = spark.read.parquet(os.path.join(SF_DIR, "embeddings.parquet"))
-    tmp = tempfile.mkdtemp(prefix="plan_audit_ann_")
+    tmp = os.path.join(root, "ann")
     cents = sample_centroids(emb, 16)
     cb = pq_codebooks(emb, m=4, n_codes=16)
     pq_index(emb, 4, 16, 16, centroids=cents, codebooks=cb).write.partitionBy("cell").parquet(
@@ -523,13 +522,11 @@ def _ann_served_df(spark):
     )
 
 
-def _ann_refined_served_df(spark):
+def _ann_refined_served_df(spark, root: str):
     """The refined serving shape: prebuilt index + a full-width refine
     table stored PARTITIONED BY cell. The audit checks the refine scan is
     dynamically partition-pruned by the broadcast shortlist (probed cells
     only) — the property that keeps full-width IO O(shortlist) at 100 TB."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from pilsner_spark.operators.ann import (
@@ -541,7 +538,7 @@ def _ann_refined_served_df(spark):
     )
 
     emb = spark.read.parquet(os.path.join(SF_DIR, "embeddings.parquet"))
-    tmp = tempfile.mkdtemp(prefix="plan_audit_ann_ref_")
+    tmp = os.path.join(root, "ann_ref")
     cents = sample_centroids(emb, 16)
     cb = pq_codebooks(emb, m=4, n_codes=16)
     pq_index(emb, 4, 16, 16, centroids=cents, codebooks=cb).write.partitionBy("cell").parquet(
@@ -599,25 +596,28 @@ def main() -> None:
 
     sections = []
     summary = []
-    for name, spec in CHECKS.items():
-        df = BUILDERS[name](spark) if name in BUILDERS else qs[name](spark, SF_DIR)
-        text = plan_text(df)
-        lines = []
-        ok_all = True
-        for label, pat in spec["want"]:
-            ok = re.search(pat, text, re.M) is not None
-            ok_all &= ok
-            lines.append(f"- [{'x' if ok else ' '}] want: {label}")
-        for label, pat in spec["avoid"]:
-            ok = re.search(pat, text, re.M) is None
-            ok_all &= ok
-            lines.append(f"- [{'x' if ok else ' '}] {label}")
-        n_exchanges = len(re.findall(r"^\(\d+\) Exchange", text, re.M))
-        lines.append(f"- exchanges in plan: {n_exchanges}")
-        summary.append((name, ok_all))
-        sections.append(
-            f"## {name}\n\n" + "\n".join(lines) + "\n\n```\n" + text.strip()[:4000] + "\n```\n"
-        )
+    # every builder's checkpoints live under one root, removed after the
+    # last explain
+    with tempfile.TemporaryDirectory(prefix="plan_audit_") as root:
+        for name, spec in CHECKS.items():
+            df = BUILDERS[name](spark, root) if name in BUILDERS else qs[name](spark, SF_DIR)
+            text = plan_text(df)
+            lines = []
+            ok_all = True
+            for label, pat in spec["want"]:
+                ok = re.search(pat, text, re.M) is not None
+                ok_all &= ok
+                lines.append(f"- [{'x' if ok else ' '}] want: {label}")
+            for label, pat in spec["avoid"]:
+                ok = re.search(pat, text, re.M) is None
+                ok_all &= ok
+                lines.append(f"- [{'x' if ok else ' '}] {label}")
+            n_exchanges = len(re.findall(r"^\(\d+\) Exchange", text, re.M))
+            lines.append(f"- exchanges in plan: {n_exchanges}")
+            summary.append((name, ok_all))
+            sections.append(
+                f"## {name}\n\n" + "\n".join(lines) + "\n\n```\n" + text.strip()[:4000] + "\n```\n"
+            )
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     with open(os.path.join(repo, "PLANS.md"), "w") as f:
