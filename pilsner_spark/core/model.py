@@ -15,6 +15,8 @@ id in first-seen order of entity_id values (model.py:324-330); the source
 
 from __future__ import annotations
 
+import dataclasses
+import hashlib
 import json
 from dataclasses import dataclass, field
 from typing import Dict, FrozenSet, List, Optional, Sequence, Set, Tuple
@@ -212,8 +214,6 @@ class CompiledModel:
         label starts inside and extends beyond another shard's match;
         test_sharded_scan_cross_shard_overlap pins the intended
         (reference-multi-trie) behavior on the divergent case."""
-        import hashlib
-
         shards: List[Dict[str, TokenIndexedMatcher]] = [
             {unit: TokenIndexedMatcher(word_separator=self.word_separator) for unit in self.matchers}
             for _ in range(n_shards)
@@ -277,29 +277,24 @@ class CompiledModel:
             "id_map": sorted(self.line_iid.items()),
         }
 
-    def config_json(self) -> str:
-        """Serializable engine config (normalizers + routing)."""
-        return json.dumps(
-            {
-                "word_separator": self.word_separator,
-                "simple": self.simple,
-                "default_normalizer": self.default_normalizer,
-                "normalizer_map": self.normalizer_map,
-                "normalizers": {
-                    name: {
-                        "name": cfg.name,
-                        "lowercase": cfg.lowercase,
-                        "bypass": cfg.bypass,
-                        "rules": [
-                            {"kind": r.kind, "frm": r.frm, "to": r.to, "where": r.where}
-                            for r in cfg.rules
-                        ],
-                    }
-                    for name, cfg in self.normalizers.items()
-                },
-            },
-            sort_keys=True,
-        )
+    def fingerprint(self) -> str:
+        """Content hash of the model, its identity in checkpoint keys: the
+        engine config (separator, simple flag, routing, every normalizer),
+        the synonym records and the keywords. Two compiles of the same rows
+        give the same fingerprint. Attribute values are not hashed (entity
+        resolution reads entity ids only); ``remove_label`` /
+        ``ignore_label`` change only the matchers and are not covered."""
+        content = {
+            "word_separator": self.word_separator,
+            "simple": self.simple,
+            "default_normalizer": self.default_normalizer,
+            "normalizer_map": self.normalizer_map,
+            "normalizers": {name: dataclasses.asdict(cfg) for name, cfg in self.normalizers.items()},
+            "synonyms": [(r.line_id, r.iid, r.entity_id, r.normalizer, r.norm_label) for r in self.synonyms],
+            "keywords": sorted((iid, sorted(tokens)) for iid, tokens in self.keywords.items()),
+            "has_keywords": self.has_keywords,
+        }
+        return hashlib.sha256(json.dumps(content, sort_keys=True).encode()).hexdigest()[:16]
 
 
 def compile_model_from_file(

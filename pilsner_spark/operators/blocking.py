@@ -25,17 +25,15 @@ from typing import Optional, Sequence, Tuple, Union
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pilsner_spark.functions.text import tokens
+
+
 def turn_key_col():
     return F.concat_ws("#", F.col("conv_id"), F.col("turn_idx").cast("string"))
 
 
 def with_turn_key(df: DataFrame) -> DataFrame:
     return df.withColumn("turn_key", turn_key_col())
-
-
-def tokens_col(norm_col: str = "norm_text"):
-    """Normalized token array (empty tokens dropped)."""
-    return F.filter(F.split(F.col(norm_col), " "), lambda t: t != "")
 
 
 def token_blocks(
@@ -46,15 +44,14 @@ def token_blocks(
     """One row per (turn, block_key): block_key = token # tool # role.
 
     ``max_df``: tokens whose document frequency exceeds it are stopworded
-    out of blocking entirely (classic DF-cap; dropped token count is
-    returned via the 'dropped_tokens' accumulator column pattern — callers
-    read it off the returned DataFrame's metadata query).
+    out of blocking entirely (classic DF-cap); the dropped tokens are not
+    counted.
     """
     toks = turns.select(
         "turn_key",
         "tool",
         "role",
-        F.explode(F.array_distinct(tokens_col(norm_col))).alias("token"),
+        F.explode(F.array_distinct(tokens(F.col(norm_col)))).alias("token"),
     )
     if max_df is not None:
         df_counts = toks.groupBy("token").agg(F.count("*").alias("df"))
@@ -86,7 +83,7 @@ def minhash_blocks(
     xxhash64(token, seed + i); bands of ``band_size`` consecutive hashes are
     themselves hashed into one block key. All JVM-side expressions.
     """
-    toks = F.array_distinct(tokens_col(norm_col))
+    toks = F.array_distinct(tokens(F.col(norm_col)))
     sig = F.array(
         *[
             F.array_min(F.transform(toks, lambda t: F.xxhash64(t, F.lit(seed + i))))

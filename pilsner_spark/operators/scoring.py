@@ -31,7 +31,7 @@ from pilsner_spark.functions.similarity import (
     levenshtein_ratio,
     token_jaccard,
 )
-from pilsner_spark.operators.blocking import tokens_col
+from pilsner_spark.functions.text import tokens
 
 
 def turn_features(turns: DataFrame, mentions_entities: DataFrame) -> DataFrame:
@@ -45,7 +45,7 @@ def turn_features(turns: DataFrame, mentions_entities: DataFrame) -> DataFrame:
     similarity feature)."""
     return (
         turns.select("turn_key", "norm_text")
-        .withColumn("tokens", F.array_distinct(tokens_col("norm_text")))
+        .withColumn("tokens", F.array_distinct(tokens(F.col("norm_text"))))
         .withColumn("htokens", F.transform("tokens", lambda t: F.xxhash64(t)))
         .join(mentions_entities.select("turn_key", "mention_entities"), "turn_key", "left")
         .withColumn("mention_entities", F.coalesce("mention_entities", F.array()))

@@ -40,9 +40,11 @@ from pilsner_spark.operators.scoring import (
     star_match_edges,
     turn_features,
 )
-from pilsner_spark.sources.catalog import Catalog
+from pilsner_spark.sources.catalog import Catalog, params_hash
 from pilsner_spark.sources.synth import SAMPLE_PLANTS, pipeline_input, synth_transcripts
 
+# root of the ER checkpoint keys: bump it when any stage's output changes
+LAYOUT = "er-v1"
 # per-turn tables up to this many rows are broadcast into O(pairs) joins
 BROADCAST_ROW_LIMIT = 2_000_000
 # the audit's gold classes: the planted entity within one (tool, role)
@@ -58,13 +60,14 @@ def default_model():
 
 
 class Pipeline:
-    """Stage orchestration with checkpoint/resume via the catalog."""
+    """Stage orchestration with checkpoint/resume via the catalog; the
+    stages form one key chain in call order, rooted at ``params``."""
 
     def __init__(self, spark: SparkSession, workdir: str, params: Optional[dict] = None):
         self.spark = spark
         self.catalog = Catalog(spark, workdir)
         os.makedirs(workdir, exist_ok=True)
-        self.params = params or {}
+        self.upstream = params_hash(params or {})
         self.metrics: Dict[str, dict] = {}
 
     def stage(
@@ -74,24 +77,27 @@ class Pipeline:
         params: Optional[dict] = None,
         facts: Optional[Callable[[DataFrame], dict]] = None,
     ) -> DataFrame:
-        """Run or resume one stage: skip when a checkpoint with the same
-        params hash exists; otherwise compute, materialize, and commit the
-        lineage with ``facts`` merged in (``Catalog.write``). A resumed
-        stage gets its facts back from that lineage. A computed stage
-        returns the table ``Catalog.write`` already read back."""
-        stage_params = {**self.params, **(params or {})}
-        lineage = self.catalog.exists(name, stage_params)
+        """Run or resume one stage, keyed on ``params`` (what its build
+        reads) plus ``upstream``: the previous stage's ``write_id``, or the
+        root's hash for the first stage. A stage that recomputes hands a
+        new link to every later stage. A resumed stage gets its facts back
+        from the lineage; a computed one returns the table that
+        ``Catalog.write`` (with ``facts`` merged in) already read back."""
+        key = {**(params or {}), "upstream": self.upstream}
+        lineage = self.catalog.exists(name, key)
         if lineage is not None:
             self.metrics[name] = {**lineage, "resumed": True}
+            self.upstream = lineage["write_id"]
             return self.catalog.read(name)
         written = []
         start = time.time()
         lineage = self.catalog.write(
-            fn(), name, stage_params, lambda out: written.append(out) or (facts(out) if facts else {})
+            fn(), name, key, lambda out: written.append(out) or (facts(out) if facts else {})
         )
         lineage["stage_wall_seconds"] = round(time.time() - start, 3)
         lineage["resumed"] = False
         self.metrics[name] = lineage
+        self.upstream = lineage["write_id"]
         return written[0]
 
 
@@ -135,25 +141,8 @@ def run_er_pipeline(
     if fuse_pairs is not True or compact_scored is not True:
         raise ValueError("fuse_pairs and compact_scored accept only True: the pipeline has one scored plan")
     model = model or default_model()
-    params = {
-        "max_block_size": max_block_size,
-        "salt_buckets": salt_buckets,
-        "max_token_df": max_token_df,
-        "jw_threshold": jw_threshold,
-        "jaccard_threshold": jaccard_threshold,
-        "use_minhash_blocks": use_minhash_blocks,
-        "minhash_num_hashes": minhash_num_hashes,
-        "minhash_band_size": minhash_band_size,
-        "snm_window": snm_window,
-        # split scored plan (base set-features stage + undecided-only JW
-        # stage); also versions the checkpoint schema so pre-split workdirs
-        # recompute instead of resuming into the wrong layout
-        "scoring_plan": "split-v2",
-        # versions the scored checkpoint layout (shared-entity + undecided rows)
-        "scored_layout": "compact-v1",
-        "model": model.config_json(),
-    }
-    pipe = Pipeline(spark, workdir, params)
+    # each stage's params list only the options its own build reads
+    pipe = Pipeline(spark, workdir, {"layout": LAYOUT, "model": model.fingerprint()})
 
     turns = pipe.stage(
         "turns_normalized",
@@ -164,7 +153,6 @@ def run_er_pipeline(
     mention_entities = pipe.stage(
         "mentions",
         lambda: with_turn_key(turn_entities_df(extract_mentions_df(transcripts, model))),
-        params={"mentions_layout": "turn-entities-v1"},
     )
 
     def build_raw_blocks() -> DataFrame:
@@ -188,7 +176,17 @@ def run_er_pipeline(
     # fused scored job, costing ~10% of the dominant stage at 8 cores). Two
     # skinny checkpoints make every reference a columnar scan: one extra
     # ~seconds write buys construction-once AND salting-once.
-    raw_blocks = pipe.stage("blocks_raw", build_raw_blocks, params={"blocks_layout": "raw-v1"})
+    raw_blocks = pipe.stage(
+        "blocks_raw",
+        build_raw_blocks,
+        params={
+            "max_token_df": max_token_df,
+            "use_minhash_blocks": use_minhash_blocks,
+            "minhash_num_hashes": minhash_num_hashes,
+            "minhash_band_size": minhash_band_size,
+            "snm_window": snm_window,
+        },
+    )
 
     def salted_key_counts(_: DataFrame) -> dict:
         # one cheap aggregation over the raw checkpoint for the
@@ -205,6 +203,7 @@ def run_er_pipeline(
     blocks = pipe.stage(
         "blocks",
         lambda: salt_oversized_blocks(raw_blocks, max_block_size, salt_buckets)[0],
+        params={"max_block_size": max_block_size, "salt_buckets": salt_buckets},
         facts=salted_key_counts,
     )
     pipe.metrics["blocking_salted_keys"] = pipe.metrics["blocks"]["salted_keys"]
@@ -262,7 +261,10 @@ def run_er_pipeline(
         return base.filter(F.col("shared_entity") | F.col("undecided"))
 
     scored_base = pipe.stage(
-        "scored_pairs", build_scored, facts=lambda _: {k: int(v or 0) for k, v in obs.get.items()}
+        "scored_pairs",
+        build_scored,
+        params={"jaccard_threshold": jaccard_threshold},
+        facts=lambda _: {k: int(v or 0) for k, v in obs.get.items()},
     )
     jw_slice = pipe.stage(
         "jw_scores",
@@ -279,7 +281,8 @@ def run_er_pipeline(
     # vCPU, 5 interleaved pairs each) made dense_cliques 8.6 % faster end to end and
     # pair_heavy 7.7 % slower: there entity_clusters went from 1.47 to
     # 3.48 s, for 2,893 star rows against 2,269 pairwise rows, so the cost is
-    # the star build's extra jobs, not data. Pick by the two counts.
+    # the star build's extra jobs, not data. Pick by the two counts. The
+    # choice follows from upstream checkpoints, so it needs no key of its own.
     n_shared = pipe.metrics["scored_pairs"]["shared_rows"]
     use_star = n_shared > n_blocks
 
@@ -294,7 +297,7 @@ def run_er_pipeline(
     clusters = pipe.stage(
         "entity_clusters",
         lambda: cluster_turns(turns, build_edges(), stats=cc_stats),
-        params={"cluster_edges": "star-v1" if use_star else "pairwise-v1"},
+        params={"jw_threshold": jw_threshold, "jaccard_threshold": jaccard_threshold},
         # convergence is known only when CC ran; lineage keeps it for resumes
         facts=lambda _: {"convergence": dict(cc_stats)},
     )

@@ -4,13 +4,13 @@ The production deployment targets Iceberg tables (`df.writeTo(...)` +
 `spark.sql.catalog.*`); this sandbox has no Iceberg jars, so the same
 interface falls back to partitioned Parquet plus a ``_lineage.json``
 sidecar per table. The sidecar carries the stage params and their hash,
-the row count, per-partition row counts, the write wall time, the schema,
-and the stage's own facts (counts its write job observed, such as CC
-convergence). It is the resume key: a table resumes when its sidecar
-records the same params hash. The key covers params only — the input
-data and the upstream checkpoints do not enter it. All checkpoint/resume
-logic is written against this interface so the Iceberg path is
-config-only (SURVEY.md §7.0).
+a fresh ``write_id``, the row count, per-partition row counts, the write
+wall time, the schema, and the stage's own facts (counts its write job
+observed, such as CC convergence). It is the resume key: a table resumes
+when its sidecar records the same params hash. ``plans/pipeline.Pipeline``
+puts the upstream stage's ``write_id`` into the params; the input data
+does not enter the key. All checkpoint/resume logic is written against
+this interface so the Iceberg path is config-only (SURVEY.md §7.0).
 """
 
 from __future__ import annotations
@@ -20,6 +20,7 @@ import json
 import os
 import shutil
 import time
+import uuid
 from dataclasses import dataclass
 from typing import Callable, Optional
 
@@ -60,9 +61,10 @@ class Catalog:
         facts: Optional[Callable[[DataFrame], dict]] = None,
     ) -> dict:
         """Materialize a stage output and commit its lineage; returns the
-        lineage. The sidecar goes before the table is replaced and comes
-        back last, so a swap, or a ``facts`` call, that fails or is killed
-        leaves no sidecar and the next run recomputes. On the Parquet path
+        lineage, stamped with a fresh ``write_id``. The sidecar goes before
+        the table is replaced and comes back last, so a swap, or a
+        ``facts`` call, that fails or is killed leaves no sidecar and the
+        next run recomputes. On the Parquet path
         the data is written to a staging directory first and swapped in
         only after that write succeeded: a failed write leaves the previous
         table and its sidecar as they were. ``facts(out)`` runs on the
@@ -118,6 +120,7 @@ class Catalog:
             "table": table,
             "params_hash": params_hash(params or {}),
             "params": params or {},
+            "write_id": uuid.uuid4().hex,
             "rows": int(sum(p["rows"] for p in per_partition)),
             "partitions": per_partition,
             # the write job (and footer reads); facts count as stage work

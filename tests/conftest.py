@@ -61,6 +61,20 @@ def build_sample_model(simple: bool = False):
     )
 
 
+def sample_model_from_lines(lines):
+    """The sample model's normalizers and routing over other dictionary
+    lines (the package's in-memory compile path)."""
+    from pilsner_spark.core.dictionary import compile_specs, fields_from_dicts, rows_from_lines
+    from pilsner_spark.core.model import CompiledModel
+
+    model = CompiledModel()
+    model.add_normalizer("t1", T1_XML)
+    model.add_normalizer("t2", T2_XML)
+    model.normalizer_map = {"tokenizer1": "t1", "tokenizer2": "t2"}
+    rows = rows_from_lines(lines, compile_specs(fields_from_dicts(SAMPLE_FIELDS)))
+    return model.compile_rows(rows, include_keywords=True)
+
+
 @pytest.fixture(scope="session")
 def sample_model():
     return build_sample_model()

@@ -8,11 +8,12 @@ Every expectation below is literal from the reference's own test suite
 import os
 
 import pytest
-from conftest import CUSTOM_XML, DEFAULT_XML, FIXTURES, SAMPLE_FIELDS, build_sample_model
+from conftest import CUSTOM_XML, DEFAULT_XML, FIXTURES, SAMPLE_FIELDS, build_sample_model, sample_model_from_lines
 
 from pilsner_spark.core.model import compile_model_from_file
 from pilsner_spark.core.parse import extract_mentions, parse, reduce_spans
 from pilsner_spark.core.scan import TokenIndexedMatcher
+from pilsner_spark.sources.sample_dictionary import SAMPLE_DICTIONARY_LINES
 
 
 # -- compile side --------------------------------------------------------
@@ -38,6 +39,19 @@ def test_compiled_synonyms(sample_model):
         ("t2", "it"): [6],
         ("t2", "o"): [7],
     }
+
+
+def test_model_fingerprint_tracks_the_dictionary(sample_model):
+    """The fingerprint is the model's checkpoint identity: equal for two
+    compiles of the same rows (through the file and the in-memory paths),
+    different for another dictionary under the same normalizers."""
+    lines = SAMPLE_DICTIONARY_LINES
+    same = sample_model_from_lines(lines)
+    assert same.fingerprint() == sample_model_from_lines(lines).fingerprint() == sample_model.fingerprint()
+    for other in (lines[:-1], [lines[0].replace("entity2", "entity3")] + lines[1:]):
+        changed = sample_model_from_lines(other)
+        assert changed.normalizers == same.normalizers and changed.normalizer_map == same.normalizer_map
+        assert changed.fingerprint() != same.fingerprint()
 
 
 def test_keywords(sample_model):

@@ -1,6 +1,9 @@
 """End-to-end corpus-prep plan (plans/corpus_prep.py): planted corpus
 with one of each removal/filter reason; checkpoint resume parity."""
 
+import os
+import shutil
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -66,13 +69,20 @@ def test_corpus_prep_resumes_from_checkpoints(spark, corpus, tmp_path):
     second = run_corpus_prep(spark, wd, corpus, benchmark=bench)
     for name in ["doc_stats", "drops", "corpus_filtered", "splits", "packed_train"]:
         assert second["metrics"][name]["resumed"] is True, name
-    assert {r.doc_id for r in second["filtered"].collect()} == {
-        r.doc_id for r in first["filtered"].collect()
-    }
+    kept = {r.doc_id for r in first["filtered"].collect()}
+    assert {r.doc_id for r in second["filtered"].collect()} == kept
     # the drop-reason counts are a fact of the drops lineage: a resume
     # reports them without recounting the ledger
     assert second["metrics"]["summary"]["drop_reasons"] == first["metrics"]["summary"]["drop_reasons"]
     assert first["metrics"]["summary"]["drop_reasons"] == {"exact_dup": 1, "near_dup": 2, "contaminated": 1}
+    # a deleted upstream checkpoint recomputes, and every later stage with it
+    shutil.rmtree(os.path.join(wd, "drops"))
+    os.remove(os.path.join(wd, "drops._lineage.json"))
+    rebuilt = run_corpus_prep(spark, wd, corpus, benchmark=bench)
+    assert rebuilt["metrics"]["doc_stats"]["resumed"] is True
+    for name in ["drops", "corpus_filtered", "splits", "packed_test", "packed_train", "packed_val"]:
+        assert rebuilt["metrics"][name]["resumed"] is False, name
+    assert {r.doc_id for r in rebuilt["filtered"].collect()} == kept
     # changed params -> stale checkpoint is NOT reused
     third = run_corpus_prep(spark, wd, corpus, benchmark=bench, pack_budget=256)
     assert third["metrics"]["packed_train"]["resumed"] is False

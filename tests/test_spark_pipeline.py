@@ -2,15 +2,17 @@
 full ER pipeline F1 gate, checkpoint/resume."""
 
 import os
+import shutil
 
 import pytest
+from conftest import sample_model_from_lines
 from pyspark.sql import functions as F
 
 from pilsner_spark.operators.blocking import candidate_pairs, token_blocks, salt_oversized_blocks, with_turn_key
 from pilsner_spark.operators.clustering import cluster_turns, connected_components
 from pilsner_spark.operators.mentions import extract_mentions_df, normalized_text_df, turn_entities_df
 from pilsner_spark.plans.pipeline import Pipeline, evaluate_f1, run_er_pipeline
-from pilsner_spark.sources.sample_dictionary import build_sample_model
+from pilsner_spark.sources.sample_dictionary import SAMPLE_DICTIONARY_LINES, build_sample_model
 from pilsner_spark.sources.synth import SAMPLE_PLANTS, synth_transcripts
 
 
@@ -510,19 +512,25 @@ def test_er_clusters_query_matches_duckdb_oracle(spark, tmp_path):
     assert len(want) == 4  # the four analytic components
 
 
+ER_STAGES = ("turns_normalized", "mentions", "blocks_raw", "blocks", "scored_pairs", "jw_scores", "entity_clusters")
+
+
+def _resumed(result) -> set:
+    return {k for k, m in result["metrics"].items() if isinstance(m, dict) and m.get("resumed")}
+
+
 def test_pipeline_resume(spark, transcripts, tmp_path):
-    """Second run with identical params resumes every stage from checkpoint;
-    a changed param invalidates downstream stages."""
+    """Each stage is keyed by the params its build reads plus the write of
+    the stage before it: an identical second run resumes every stage; a
+    changed param recomputes its stage and every later one; a deleted
+    upstream checkpoint recomputes from there on."""
     work = str(tmp_path / "resume")
     with pytest.raises(ValueError):
         run_er_pipeline(spark, work, transcripts, fuse_pairs=False)
     r1 = run_er_pipeline(spark, work, transcripts)
     assert all(not m.get("resumed", False) for m in r1["metrics"].values() if isinstance(m, dict) and "resumed" in m)
     r2 = run_er_pipeline(spark, work, transcripts)
-    resumed = [k for k, m in r2["metrics"].items() if isinstance(m, dict) and m.get("resumed")]
-    assert set(resumed) == {
-        "turns_normalized", "mentions", "blocks_raw", "blocks", "scored_pairs", "jw_scores", "entity_clusters",
-    }
+    assert _resumed(r2) == set(ER_STAGES)
     # stage facts come back from lineage: CC convergence, salted-key
     # counts and the scored-stage Observation counts
     assert r1["metrics"]["clustering_convergence"]["converged"] is True
@@ -531,9 +539,21 @@ def test_pipeline_resume(spark, transcripts, tmp_path):
     assert r2["metrics"]["blocking_salted_keys"] == r1["metrics"]["blocking_salted_keys"]
     for k in ("pairs_full", "shared_rows", "undecided_rows"):
         assert r2["metrics"]["scored_pairs"][k] == r1["metrics"]["scored_pairs"][k] > 0, k
-    # param change -> stages recompute
+    # jw_threshold is read by the clustering stage only
     r3 = run_er_pipeline(spark, work, transcripts, jw_threshold=0.95)
-    assert not r3["metrics"]["scored_pairs"].get("resumed")
+    assert _resumed(r3) == set(ER_STAGES[:6])
+    # jaccard_threshold is read from the scored stage on
+    r4 = run_er_pipeline(spark, work, transcripts, jw_threshold=0.95, jaccard_threshold=0.65)
+    assert _resumed(r4) == set(ER_STAGES[:4])
+    # a deleted upstream checkpoint recomputes, and so does everything after it
+    shutil.rmtree(os.path.join(work, "blocks_raw"))
+    os.remove(os.path.join(work, "blocks_raw._lineage.json"))
+    r5 = run_er_pipeline(spark, work, transcripts, jw_threshold=0.95, jaccard_threshold=0.65)
+    assert _resumed(r5) == {"turns_normalized", "mentions"}
+    # another dictionary under the same normalizers: nothing resumes
+    other = sample_model_from_lines(SAMPLE_DICTIONARY_LINES[:-1])
+    r6 = run_er_pipeline(spark, work, transcripts, model=other, jw_threshold=0.95, jaccard_threshold=0.65)
+    assert _resumed(r6) == set()
 
 
 def _rows_stage(spark, n: int):
