@@ -169,7 +169,10 @@ def run_corpus_prep(
     against the target distribution and only the top-k weights proceed to
     split/pack. Returns {'packed': {split: DataFrame}, 'filtered':
     DataFrame, 'drops': DataFrame, 'metrics': dict, 'pipeline':
-    Pipeline}."""
+    Pipeline}. The returned tables read checkpoint generations: each
+    stays readable through one later recompute of its stage on the same
+    workdir, and a reused workdir holds at most two generations per
+    table."""
     split_weights = split_weights or {"train": 8, "val": 1, "test": 1}
     params = {
         "minhash_num_hashes": minhash_num_hashes,

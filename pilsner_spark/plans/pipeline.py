@@ -135,7 +135,10 @@ def run_er_pipeline(
 
     Returns {'clusters': DataFrame, 'pairs_all': DataFrame (the lazy
     candidate-pair plan, key_a/key_b), 'blocks_salted': DataFrame (the
-    ``blocks`` checkpoint), 'metrics': dict, 'pipeline': Pipeline}.
+    ``blocks`` checkpoint), 'metrics': dict, 'pipeline': Pipeline}. The
+    returned tables read checkpoint generations: each stays readable
+    through one later recompute of its stage on the same workdir, and a
+    reused workdir holds at most two generations per table.
     """
     # perfbench/tracing.py reads both defaults by name; no other value exists
     if fuse_pairs is not True or compact_scored is not True:

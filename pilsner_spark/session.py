@@ -13,6 +13,14 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 
 
+def default_driver_memory() -> str:
+    """8g, or a third of the host's physical memory when that is less
+    (whole GB, at least 1g): the heap is pre-touched below, so two
+    sessions at 8g on a 15 GB host get one of them OOM-killed."""
+    host = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(8, round(host / 3 / 2**30)))}g"
+
+
 def get_spark(
     app_name: str = "pilsner-spark",
     cpus: Optional[int] = None,
@@ -37,7 +45,7 @@ def get_spark(
     if shuffle_partitions is None:
         # 2x cores locally; on a real cluster this is overridden per job
         shuffle_partitions = max(8, 2 * cpus_for_shuffle)
-    driver_mem = os.environ.get("SPARK_DRIVER_MEMORY", "8g")
+    driver_mem = os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory()
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)

@@ -2,28 +2,46 @@
 
 The production deployment targets Iceberg tables (`df.writeTo(...)` +
 `spark.sql.catalog.*`); this sandbox has no Iceberg jars, so the same
-interface falls back to partitioned Parquet plus a ``_lineage.json``
-sidecar per table. The sidecar carries the stage params and their hash,
-a fresh ``write_id``, the row count, per-partition row counts, the write
-wall time, the schema, and the stage's own facts (counts its write job
+interface falls back to Parquet plus a ``_lineage.json`` sidecar per
+table. Every write makes an immutable generation: a new
+``<table>/<write_id>/`` Parquet directory, or a new Iceberg snapshot.
+Replacing the sidecar (temp file plus ``os.replace``) is the one commit
+point. The sidecar names the committed generation and ``read`` follows
+it, so a write that fails or is killed anywhere before that replace
+leaves the last committed generation readable and resumable, and a
+half-written generation is never read. After the commit the Parquet path
+removes every entry under ``<table>/`` except the new generation and the
+one committed before it: a table read from this catalog stays readable
+through one later recompute, and a half-written generation, or the
+in-place files of a pre-generation layout, go with the next successful
+write. The Iceberg path leaves snapshot expiry to the table's own
+maintenance.
+
+The sidecar also carries the stage params and their hash, a fresh
+``write_id``, the row count, per-partition row counts, the write wall
+time, the schema, and the stage's own facts (counts its write job
 observed, such as CC convergence). It is the resume key: a table resumes
-when its sidecar records the same params hash. ``plans/pipeline.Pipeline``
-puts the upstream stage's ``write_id`` into the params; the input data
-does not enter the key. All checkpoint/resume logic is written against
-this interface so the Iceberg path is config-only (SURVEY.md §7.0).
+when its sidecar names a generation and records the same params hash.
+``plans/pipeline.Pipeline`` puts the upstream stage's ``write_id`` into
+the params; the input data does not enter the key. All checkpoint/resume
+logic is written against this interface so the Iceberg path is
+config-only (SURVEY.md §7.0).
 """
 
 from __future__ import annotations
 
+import glob
 import hashlib
 import json
 import os
 import shutil
 import time
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from typing import Callable, Optional
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -46,10 +64,10 @@ class Catalog:
 
     def exists(self, table: str, params: dict) -> Optional[dict]:
         """The table's lineage when it is a resumable checkpoint under
-        ``params`` (sidecar present, readable, same params hash), else
-        None — the stage-skip test for resume."""
+        ``params`` (sidecar present, readable, naming a generation, same
+        params hash), else None — the stage-skip test for resume."""
         lineage = self.lineage(table)
-        if lineage is None or lineage.get("params_hash") != params_hash(params):
+        if lineage is None or "generation" not in lineage or lineage["params_hash"] != params_hash(params):
             return None
         return lineage
 
@@ -60,44 +78,27 @@ class Catalog:
         params: Optional[dict] = None,
         facts: Optional[Callable[[DataFrame], dict]] = None,
     ) -> dict:
-        """Materialize a stage output and commit its lineage; returns the
-        lineage, stamped with a fresh ``write_id``. The sidecar goes before
-        the table is replaced and comes back last, so a swap, or a
-        ``facts`` call, that fails or is killed leaves no sidecar and the
-        next run recomputes. On the Parquet path
-        the data is written to a staging directory first and swapped in
-        only after that write succeeded: a failed write leaves the previous
-        table and its sidecar as they were. ``facts(out)`` runs on the
-        written table after the write job (Observation values are ready)
-        and its dict is merged into the lineage."""
+        """Materialize a stage output as a new generation and commit its
+        lineage; returns the lineage, stamped with a fresh ``write_id``.
+        ``facts(out)`` runs on the written generation after the write job
+        (Observation values are ready) and its dict is merged into the
+        lineage. The sidecar replace comes last, so a write job, footer
+        read, ``facts`` call or replace that fails leaves the previous
+        sidecar, and the generation it names, as they were."""
         start = time.time()
-        lineage_path = self._lineage_path(table)
-        path = self._path(table)
+        committed = (self.lineage(table) or {}).get("generation")
+        write_id = uuid.uuid4().hex
         if self.use_iceberg:
-            if os.path.exists(lineage_path):
-                os.remove(lineage_path)
             df.writeTo(table).createOrReplace()
-            out = self.read(table)
-            per_partition = [
-                {"partition": int(i), "rows": int(n)}
-                for i, n in out.withColumn("_pid", F.spark_partition_id())
-                .groupBy("_pid")
-                .count()
-                .orderBy("_pid")
-                .collect()
-            ]
+            snapshots = self.spark.read.table(f"{table}.snapshots")
+            generation = snapshots.orderBy(F.desc("committed_at")).first()["snapshot_id"]
+            out = self._generation(table, generation)
+            counts = out.groupBy(F.spark_partition_id().alias("_pid")).count().orderBy("_pid").collect()
+            per_partition = [{"partition": int(i), "rows": int(n)} for i, n in counts]
         else:
-            staging = os.path.join(self.root, f"{table}._staging")
-            try:
-                df.write.mode("overwrite").parquet(staging)
-            except BaseException:
-                shutil.rmtree(staging, ignore_errors=True)
-                raise
-            if os.path.exists(lineage_path):
-                os.remove(lineage_path)
-            shutil.rmtree(path, ignore_errors=True)
-            os.rename(staging, path)
-            out = self.read(table)
+            generation = write_id
+            df.write.parquet(os.path.join(self._path(table), generation))
+            out = self._generation(table, generation)
             # per-partition lineage from parquet footers (file metadata) —
             # what an Iceberg snapshot's manifest carries; zero extra scan
             # (the Spark-job alternative re-reads every written row). Footer
@@ -105,22 +106,16 @@ class Catalog:
             # n_files per stage of pure driver latency, which is dead time
             # at every parallelism level (it was a visible slice of the
             # fixed per-stage cost in the scaling runs).
-            import glob as _glob
-            from concurrent.futures import ThreadPoolExecutor
-
-            import pyarrow.parquet as _pq
-
-            files = sorted(_glob.glob(os.path.join(path, "part-*")))
+            files = sorted(glob.glob(os.path.join(self._path(table), generation, "part-*")))
             with ThreadPoolExecutor(max_workers=16) as ex:
-                rows_per_file = list(ex.map(lambda f: int(_pq.ParquetFile(f).metadata.num_rows), files))
-            per_partition = [
-                {"partition": i, "rows": n} for i, n in enumerate(rows_per_file)
-            ]
+                rows_per_file = list(ex.map(lambda f: int(pq.ParquetFile(f).metadata.num_rows), files))
+            per_partition = [{"partition": i, "rows": n} for i, n in enumerate(rows_per_file)]
         lineage = {
             "table": table,
             "params_hash": params_hash(params or {}),
             "params": params or {},
-            "write_id": uuid.uuid4().hex,
+            "write_id": write_id,
+            "generation": generation,
             "rows": int(sum(p["rows"] for p in per_partition)),
             "partitions": per_partition,
             # the write job (and footer reads); facts count as stage work
@@ -129,16 +124,27 @@ class Catalog:
         }
         if facts is not None:
             lineage.update(facts(out))
-        tmp = f"{lineage_path}.tmp"
+        tmp = f"{self._lineage_path(table)}.tmp"
         with open(tmp, "w") as f:
             json.dump(lineage, f, indent=1)
-        os.replace(tmp, lineage_path)
+        os.replace(tmp, self._lineage_path(table))
+        if not self.use_iceberg:
+            for entry in set(os.listdir(self._path(table))) - {generation, committed}:
+                stale = os.path.join(self._path(table), entry)
+                if os.path.isdir(stale):
+                    shutil.rmtree(stale)
+                else:  # in-place files of a pre-generation layout
+                    os.remove(stale)
         return lineage
 
     def read(self, table: str) -> DataFrame:
+        """The committed generation of ``table``."""
+        return self._generation(table, self.lineage(table)["generation"])
+
+    def _generation(self, table: str, generation: str | int) -> DataFrame:
         if self.use_iceberg:
-            return self.spark.read.table(table)
-        return self.spark.read.parquet(self._path(table))
+            return self.spark.read.option("snapshot-id", generation).table(table)
+        return self.spark.read.parquet(os.path.join(self._path(table), generation))
 
     def lineage(self, table: str) -> Optional[dict]:
         try:

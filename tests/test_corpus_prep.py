@@ -83,6 +83,8 @@ def test_corpus_prep_resumes_from_checkpoints(spark, corpus, tmp_path):
     for name in ["drops", "corpus_filtered", "splits", "packed_test", "packed_train", "packed_val"]:
         assert rebuilt["metrics"][name]["resumed"] is False, name
     assert {r.doc_id for r in rebuilt["filtered"].collect()} == kept
+    # rebuilt wrote a new corpus_filtered generation; first's table still reads
+    assert {r.doc_id for r in first["filtered"].collect()} == kept
     # changed params -> stale checkpoint is NOT reused
     third = run_corpus_prep(spark, wd, corpus, benchmark=bench, pack_budget=256)
     assert third["metrics"]["packed_train"]["resumed"] is False

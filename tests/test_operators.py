@@ -159,6 +159,38 @@ def test_bench_compact_line_stays_under_tail_window():
     assert json.loads(line2)["queries_dropped_for_size"] is True
 
 
+def test_plan_audit_normalizes_run_to_run_noise():
+    """PLANS.md keeps the explain text without the ids that change from
+    run to run, so two runs over the same plans write the same file."""
+    from tools.explain_audit import normalize_plan
+
+    run = (
+        "(3) Project [key_a#1234L, filter(h#77, lambdafunction(NOT (lambda x_135#151 = ), lambda x_135#151))]\n"
+        "Arguments: [c_vec#1060], MapPartitionsRDD[298] at localCheckpoint, plan_id=104\n"
+        "Location: InMemoryFileIndex [file:/tmp/plan_audit_uwq_xq6a/split/blocks]\n"
+        "(4) Exchange hashpartitioning(max_2#9, 8)"
+    )
+    assert normalize_plan(run) == (
+        "(3) Project [key_a#NL, filter(h#N, lambdafunction(NOT (lambda x_N#N = ), lambda x_N#N))]\n"
+        "Arguments: [c_vec#N], MapPartitionsRDD[N] at localCheckpoint, plan_id=N\n"
+        "Location: InMemoryFileIndex [file:/tmp/plan_audit_ROOT/split/blocks]\n"
+        "(4) Exchange hashpartitioning(max_2#N, 8)"
+    )
+
+
+def test_default_driver_memory_follows_the_host(monkeypatch):
+    """The pre-touched heap defaults to 8g or a third of physical memory,
+    whichever is less, in whole GB."""
+    from pilsner_spark import session
+
+    def host(gb):
+        pages = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": gb * 2**30 // 4096}
+        monkeypatch.setattr(session.os, "sysconf", pages.__getitem__)
+        return session.default_driver_memory()
+
+    assert (host(15), host(64), host(2)) == ("5g", "8g", "1g")
+
+
 def test_corpus_profile_approx_matches_exact(spark):
     """corpus_profile: approx=True (the default 100 TB path —
     approx_percentile sketch, bounded group memory) must agree with the

@@ -1,6 +1,7 @@
 """Spark-layer tests: mention extraction, blocking, scoring, clustering,
 full ER pipeline F1 gate, checkpoint/resume."""
 
+import json
 import os
 import shutil
 
@@ -542,6 +543,8 @@ def test_pipeline_resume(spark, transcripts, tmp_path):
     # jw_threshold is read by the clustering stage only
     r3 = run_er_pipeline(spark, work, transcripts, jw_threshold=0.95)
     assert _resumed(r3) == set(ER_STAGES[:6])
+    # r3 wrote a new entity_clusters generation; r1's table still reads
+    assert len(r1["clusters"].collect()) == r1["metrics"]["entity_clusters"]["rows"]
     # jaccard_threshold is read from the scored stage on
     r4 = run_er_pipeline(spark, work, transcripts, jw_threshold=0.95, jaccard_threshold=0.65)
     assert _resumed(r4) == set(ER_STAGES[:4])
@@ -563,9 +566,9 @@ def _rows_stage(spark, n: int):
 def test_stage_failed_recompute_does_not_resume_stale_sidecar(spark, tmp_path):
     """A stage written with p1, then recomputed with p2 by a plan that fails
     inside the write job, keeps the p1 checkpoint: the p2 data goes to a
-    staging directory that replaces the table only after the write
-    succeeded, so the next p1 call resumes onto the intact p1 table and no
-    staging directory is left behind."""
+    new generation under the table's directory that no sidecar names, so
+    the next p1 call resumes onto the intact p1 generation and nothing is
+    left beside the table and its sidecar."""
     work = str(tmp_path / "stale")
     assert Pipeline(spark, work, {"p": 1}).stage("t", _rows_stage(spark, 3)).count() == 3
 
@@ -603,6 +606,82 @@ def test_stage_failing_facts_leave_no_resumable_checkpoint(spark, tmp_path):
     resumed = Pipeline(spark, work, {"p": 1})
     assert resumed.stage("t", never, facts=never).count() == 3
     assert resumed.metrics["t"]["resumed"] is True and resumed.metrics["t"]["n"] == 3
+
+
+def _never(*_):
+    raise AssertionError("a resumed stage must not recompute")
+
+
+def _count(out):
+    return {"n": out.count()}
+
+
+def _failing_write(step: str, spark, monkeypatch):
+    """(build, facts) for a recompute whose ``Catalog.write`` raises at
+    ``step``."""
+    import pyarrow.parquet as pq
+
+    def boom(*_):
+        raise RuntimeError("step failed")
+
+    if step == "write job":
+        fail = F.when(F.col("id") >= 0, F.raise_error(F.lit("step failed"))).otherwise(F.col("id"))
+        return lambda: spark.range(5).select(fail.alias("x")), None
+    if step == "facts":
+        return _rows_stage(spark, 5), boom
+    if step == "footer read":
+        monkeypatch.setattr(pq, "ParquetFile", boom)
+    else:  # the sidecar replace
+        replace = os.replace
+        monkeypatch.setattr(os, "replace", lambda src, dst: boom() if dst.endswith("._lineage.json") else replace(src, dst))
+    return _rows_stage(spark, 5), None
+
+
+@pytest.mark.parametrize("step", ["write job", "footer read", "facts", "sidecar replace"])
+def test_stage_failure_at_each_write_step_keeps_committed_generation(spark, tmp_path, monkeypatch, step):
+    """A recompute under p2 that raises at any step of ``Catalog.write``
+    before the sidecar replace leaves the p1 generation committed: the
+    next p1 call resumes it with its rows and facts, and a p2 call then
+    recomputes. The table the p1 write returned still reads after that
+    recompute, and the clean-up keeps two generations, not the
+    half-written one."""
+    work = str(tmp_path / "steps")
+    first = Pipeline(spark, work, {"p": 1}).stage("t", _rows_stage(spark, 3), facts=_count)
+    build, facts = _failing_write(step, spark, monkeypatch)
+    with pytest.raises(Exception, match="step failed"):
+        Pipeline(spark, work, {"p": 2}).stage("t", build, facts=facts)
+    monkeypatch.undo()
+    p1 = Pipeline(spark, work, {"p": 1})
+    assert sorted(r.x for r in p1.stage("t", _never, facts=_never).collect()) == [0, 1, 2]
+    assert p1.metrics["t"]["resumed"] is True and p1.metrics["t"]["n"] == 3
+    p2 = Pipeline(spark, work, {"p": 2})
+    assert p2.stage("t", _rows_stage(spark, 5), facts=_count).count() == 5
+    assert p2.metrics["t"]["resumed"] is False and p2.metrics["t"]["n"] == 5
+    assert sorted(r.x for r in first.collect()) == [0, 1, 2]
+    assert sorted(os.listdir(os.path.join(work, "t"))) == sorted(
+        m.metrics["t"]["generation"] for m in (p1, p2)
+    )
+
+
+def test_stage_pre_generation_layout_recomputes(spark, tmp_path):
+    """A sidecar that names no generation (the in-place layout from before
+    generations) is not resumable: the stage recomputes, and the clean-up
+    after its commit removes the old in-place files."""
+    work = str(tmp_path / "old")
+    Pipeline(spark, work, {"p": 1}).stage("t", _rows_stage(spark, 3))
+    table, sidecar = os.path.join(work, "t"), os.path.join(work, "t._lineage.json")
+    with open(sidecar) as f:
+        lineage = json.load(f)
+    generation = os.path.join(table, lineage.pop("generation"))
+    for name in os.listdir(generation):
+        os.rename(os.path.join(generation, name), os.path.join(table, name))
+    os.rmdir(generation)
+    with open(sidecar, "w") as f:
+        json.dump(lineage, f)
+    pipe = Pipeline(spark, work, {"p": 1})
+    assert sorted(r.x for r in pipe.stage("t", _rows_stage(spark, 3)).collect()) == [0, 1, 2]
+    assert pipe.metrics["t"]["resumed"] is False
+    assert os.listdir(table) == [pipe.metrics["t"]["generation"]]
 
 
 def test_lineage_recorded(er_run):
@@ -704,33 +783,62 @@ def test_catalog_iceberg_path_routing(spark, tmp_path, monkeypatch):
     """The Iceberg write/read branch (Catalog(use_iceberg=True)) with the
     table API mocked — no Iceberg jars exist in this sandbox (SURVEY §7.0),
     so this pins the abstraction: writes route through df.writeTo(...)
-    .createOrReplace(), reads through spark.read.table(...), and the
-    lineage sidecar + params-hash resume contract behave identically to
-    the Parquet branch."""
+    .createOrReplace(), the new snapshot id comes from the table's
+    ``.snapshots`` metadata table and is the sidecar's generation, reads
+    pin it through spark.read.option("snapshot-id", ...).table(...), and
+    the lineage sidecar + params-hash resume contract behave identically
+    to the Parquet branch: a createOrReplace that raises leaves the last
+    committed snapshot resumable."""
     from types import SimpleNamespace
 
     from pilsner_spark.sources.catalog import Catalog
 
-    store = {}
+    snapshots = {}  # table -> its written DataFrames; snapshot id = position + 1
+    pins, failing = [], []
+
+    def write_to(self, tbl):
+        def create_or_replace():
+            if failing:
+                raise RuntimeError("createOrReplace failed")
+            snapshots.setdefault(tbl, []).append(self)
+
+        return SimpleNamespace(createOrReplace=create_or_replace)
+
+    def option(self, key, value):
+        self._snapshot_id = int(value) if key == "snapshot-id" else None
+        return self
+
+    def table(self, tbl):
+        if tbl.endswith(".snapshots"):
+            n = len(snapshots[tbl[: -len(".snapshots")]])
+            return spark.createDataFrame([(i + 1, 1000 + i) for i in range(n)], "snapshot_id long, committed_at long")
+        pins.append(self._snapshot_id)
+        return snapshots[tbl][self._snapshot_id - 1]
+
     df = spark.range(5).select(F.col("id").alias("x"))
     # patch the live classes (PySpark 4 instances are classic.DataFrame /
     # classic.DataFrameReader, not the pyspark.sql facade types)
-    monkeypatch.setattr(
-        type(df),
-        "writeTo",
-        lambda self, tbl: SimpleNamespace(createOrReplace=lambda: store.__setitem__(tbl, self)),
-    )
-    monkeypatch.setattr(type(spark.read), "table", lambda self, tbl: store[tbl])
+    monkeypatch.setattr(type(df), "writeTo", write_to)
+    monkeypatch.setattr(type(spark.read), "option", option)
+    monkeypatch.setattr(type(spark.read), "table", table)
 
     cat = Catalog(spark, str(tmp_path / "ice"), use_iceberg=True)
     os.makedirs(str(tmp_path / "ice"), exist_ok=True)
     lineage = cat.write(df, "stage_t", {"p": 1})
-    assert "stage_t" in store  # routed through the v2 writeTo API
-    assert lineage["rows"] == 5
+    assert len(snapshots["stage_t"]) == 1  # routed through the v2 writeTo API
+    assert lineage["generation"] == 1 and lineage["rows"] == 5
     assert sum(p["rows"] for p in lineage["partitions"]) == 5
-    assert cat.read("stage_t").count() == 5  # routed through read.table
+    assert cat.read("stage_t").count() == 5 and pins[-1] == 1  # read.table pinned to the sidecar's snapshot
     assert cat.exists("stage_t", {"p": 1})  # resume contract: params hash
     assert not cat.exists("stage_t", {"p": 2})
+    assert cat.write(df.limit(3), "stage_t", {"p": 2})["generation"] == 2
+    assert cat.read("stage_t").count() == 3 and pins[-1] == 2
+    assert cat.exists("stage_t", {"p": 2}) and not cat.exists("stage_t", {"p": 1})
+    failing.append(True)
+    with pytest.raises(RuntimeError, match="createOrReplace failed"):
+        cat.write(df, "stage_t", {"p": 3})
+    assert cat.exists("stage_t", {"p": 2})["generation"] == 2
+    assert cat.read("stage_t").count() == 3 and pins[-1] == 2
 
 
 def test_sharded_scan_cross_shard_overlap(spark):
