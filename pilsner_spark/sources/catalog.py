@@ -86,6 +86,8 @@ class Catalog:
         read, ``facts`` call or replace that fails leaves the previous
         sidecar, and the generation it names, as they were."""
         start = time.time()
+        lineage_path = self._lineage_path(table)
+        path = self._path(table)
         committed = (self.lineage(table) or {}).get("generation")
         write_id = uuid.uuid4().hex
         if self.use_iceberg:
@@ -97,7 +99,7 @@ class Catalog:
             per_partition = [{"partition": int(i), "rows": int(n)} for i, n in counts]
         else:
             generation = write_id
-            df.write.parquet(os.path.join(self._path(table), generation))
+            df.write.parquet(os.path.join(path, generation))
             out = self._generation(table, generation)
             # per-partition lineage from parquet footers (file metadata) —
             # what an Iceberg snapshot's manifest carries; zero extra scan
@@ -106,7 +108,7 @@ class Catalog:
             # n_files per stage of pure driver latency, which is dead time
             # at every parallelism level (it was a visible slice of the
             # fixed per-stage cost in the scaling runs).
-            files = sorted(glob.glob(os.path.join(self._path(table), generation, "part-*")))
+            files = sorted(glob.glob(os.path.join(path, generation, "part-*")))
             with ThreadPoolExecutor(max_workers=16) as ex:
                 rows_per_file = list(ex.map(lambda f: int(pq.ParquetFile(f).metadata.num_rows), files))
             per_partition = [{"partition": i, "rows": n} for i, n in enumerate(rows_per_file)]
@@ -124,13 +126,13 @@ class Catalog:
         }
         if facts is not None:
             lineage.update(facts(out))
-        tmp = f"{self._lineage_path(table)}.tmp"
+        tmp = f"{lineage_path}.tmp"
         with open(tmp, "w") as f:
             json.dump(lineage, f, indent=1)
-        os.replace(tmp, self._lineage_path(table))
+        os.replace(tmp, lineage_path)
         if not self.use_iceberg:
-            for entry in set(os.listdir(self._path(table))) - {generation, committed}:
-                stale = os.path.join(self._path(table), entry)
+            for entry in set(os.listdir(path)) - {generation, committed}:
+                stale = os.path.join(path, entry)
                 if os.path.isdir(stale):
                     shutil.rmtree(stale)
                 else:  # in-place files of a pre-generation layout
