@@ -1,5 +1,7 @@
 import os
 import sys
+import time
+import uuid
 
 import pytest
 
@@ -88,3 +90,37 @@ def spark():
     spark = get_spark(app_name="pilsner-spark-tests", cpus=4, shuffle_partitions=8)
     yield spark
     spark.stop()
+
+
+def spark_jobs_of(spark, fn):
+    """``(fn(), ids of the Spark jobs fn started)``: fn runs under a job
+    group of its own, which is reset after. A marker job closes the group:
+    the status tracker learns of jobs from the listener bus in start order,
+    so once the marker shows, every job fn started shows too."""
+    sc = spark.sparkContext
+    group = f"jobs-of-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        result = fn()
+        sc.parallelize([0], 1).count()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    deadline = time.time() + 60
+    while not (ids := sc.statusTracker().getJobIdsForGroup(group)) and time.time() < deadline:
+        time.sleep(0.05)
+    assert ids, "the marker job never reached the status tracker"
+    return result, sorted(ids)[:-1]
+
+
+def assert_recorded_schemas(spark, catalog, tables):
+    """Each table's sidecar records the schema Spark infers from its
+    generation's files (nullability and ``containsNull`` included), and
+    ``read`` opens the generation with it."""
+    from pyspark.sql.types import StructType
+
+    for t in tables:
+        lineage = catalog.lineage(t)
+        files = spark.read.parquet(os.path.join(catalog.root, t, lineage["generation"])).schema
+        assert StructType.fromJson(lineage["schema"]) == files, t
+        assert catalog.read(t).schema == files, t

@@ -5,6 +5,7 @@ import os
 import shutil
 
 import pytest
+from conftest import assert_recorded_schemas, spark_jobs_of
 from pyspark.sql import functions as F
 
 from pilsner_spark.plans.corpus_prep import run_corpus_prep
@@ -66,9 +67,12 @@ def test_corpus_prep_resumes_from_checkpoints(spark, corpus, tmp_path):
     bench = spark.createDataFrame([(100, BENCH)], ["doc_id", "text"])
     wd = str(tmp_path / "wd")
     first = run_corpus_prep(spark, wd, corpus, benchmark=bench)
-    second = run_corpus_prep(spark, wd, corpus, benchmark=bench)
+    second, jobs = spark_jobs_of(spark, lambda: run_corpus_prep(spark, wd, corpus, benchmark=bench))
     for name in ["doc_stats", "drops", "corpus_filtered", "splits", "packed_train"]:
         assert second["metrics"][name]["resumed"] is True, name
+    assert jobs == []  # a full resume opens every checkpoint with no Spark job
+    tables = [t for t, m in second["metrics"].items() if isinstance(m, dict) and "generation" in m]
+    assert_recorded_schemas(spark, second["pipeline"].catalog, tables)
     kept = {r.doc_id for r in first["filtered"].collect()}
     assert {r.doc_id for r in second["filtered"].collect()} == kept
     # the drop-reason counts are a fact of the drops lineage: a resume

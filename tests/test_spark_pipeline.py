@@ -6,8 +6,9 @@ import os
 import shutil
 
 import pytest
-from conftest import sample_model_from_lines
+from conftest import assert_recorded_schemas, sample_model_from_lines, spark_jobs_of
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from pilsner_spark.operators.blocking import candidate_pairs, token_blocks, salt_oversized_blocks, with_turn_key
 from pilsner_spark.operators.clustering import cluster_turns, connected_components
@@ -524,14 +525,16 @@ def test_pipeline_resume(spark, transcripts, tmp_path):
     """Each stage is keyed by the params its build reads plus the write of
     the stage before it: an identical second run resumes every stage; a
     changed param recomputes its stage and every later one; a deleted
-    upstream checkpoint recomputes from there on."""
+    upstream checkpoint recomputes from there on. A full resume starts no
+    Spark job: every checkpoint opens with the schema its sidecar records."""
     work = str(tmp_path / "resume")
     with pytest.raises(ValueError):
         run_er_pipeline(spark, work, transcripts, fuse_pairs=False)
     r1 = run_er_pipeline(spark, work, transcripts)
     assert all(not m.get("resumed", False) for m in r1["metrics"].values() if isinstance(m, dict) and "resumed" in m)
-    r2 = run_er_pipeline(spark, work, transcripts)
+    r2, jobs = spark_jobs_of(spark, lambda: run_er_pipeline(spark, work, transcripts))
     assert _resumed(r2) == set(ER_STAGES)
+    assert jobs == []
     # stage facts come back from lineage: CC convergence, salted-key
     # counts and the scored-stage Observation counts
     assert r1["metrics"]["clustering_convergence"]["converged"] is True
@@ -663,19 +666,26 @@ def test_stage_failure_at_each_write_step_keeps_committed_generation(spark, tmp_
     )
 
 
-def test_stage_pre_generation_layout_recomputes(spark, tmp_path):
-    """A sidecar that names no generation (the in-place layout from before
-    generations) is not resumable: the stage recomputes, and the clean-up
-    after its commit removes the old in-place files."""
+@pytest.mark.parametrize("layout", ["in-place", "simpleString schema"])
+def test_stage_pre_generation_layout_recomputes(spark, tmp_path, layout):
+    """A sidecar of an older layout is not resumable: one that names no
+    generation (the in-place layout from before generations), or one that
+    names a generation but records its schema as ``simpleString`` text
+    rather than Spark's JSON struct. The stage recomputes, and the
+    clean-up after its commit removes the old files, leaving one
+    generation."""
     work = str(tmp_path / "old")
     Pipeline(spark, work, {"p": 1}).stage("t", _rows_stage(spark, 3))
     table, sidecar = os.path.join(work, "t"), os.path.join(work, "t._lineage.json")
     with open(sidecar) as f:
         lineage = json.load(f)
-    generation = os.path.join(table, lineage.pop("generation"))
-    for name in os.listdir(generation):
-        os.rename(os.path.join(generation, name), os.path.join(table, name))
-    os.rmdir(generation)
+    if layout == "in-place":
+        generation = os.path.join(table, lineage.pop("generation"))
+        for name in os.listdir(generation):
+            os.rename(os.path.join(generation, name), os.path.join(table, name))
+        os.rmdir(generation)
+    else:
+        lineage["schema"] = StructType.fromJson(lineage["schema"]).simpleString()
     with open(sidecar, "w") as f:
         json.dump(lineage, f)
     pipe = Pipeline(spark, work, {"p": 1})
@@ -684,7 +694,7 @@ def test_stage_pre_generation_layout_recomputes(spark, tmp_path):
     assert os.listdir(table) == [pipe.metrics["t"]["generation"]]
 
 
-def test_lineage_recorded(er_run):
+def test_lineage_recorded(spark, er_run):
     result = er_run
     # scored_pairs, not the pair table: the pipeline never materializes
     # the candidate pairs, so their lineage lives in the consumer.
@@ -692,7 +702,8 @@ def test_lineage_recorded(er_run):
     assert lineage["rows"] > 0
     assert len(lineage["partitions"]) >= 1
     assert sum(p["rows"] for p in lineage["partitions"]) == lineage["rows"]
-    assert "params_hash" in lineage and "schema" in lineage
+    assert "params_hash" in lineage
+    assert_recorded_schemas(spark, result["pipeline"].catalog, ER_STAGES)
 
 
 def test_score_pairs_broadcast_and_shuffle_paths_agree(spark):
@@ -826,6 +837,7 @@ def test_catalog_iceberg_path_routing(spark, tmp_path, monkeypatch):
     os.makedirs(str(tmp_path / "ice"), exist_ok=True)
     lineage = cat.write(df, "stage_t", {"p": 1})
     assert len(snapshots["stage_t"]) == 1  # routed through the v2 writeTo API
+    assert StructType.fromJson(lineage["schema"]) == df.schema  # the snapshot's schema, recorded
     assert lineage["generation"] == 1 and lineage["rows"] == 5
     assert sum(p["rows"] for p in lineage["partitions"]) == 5
     assert cat.read("stage_t").count() == 5 and pins[-1] == 1  # read.table pinned to the sidecar's snapshot
