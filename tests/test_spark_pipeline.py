@@ -666,32 +666,32 @@ def test_stage_failure_at_each_write_step_keeps_committed_generation(spark, tmp_
     )
 
 
-@pytest.mark.parametrize("layout", ["in-place", "simpleString schema"])
-def test_stage_pre_generation_layout_recomputes(spark, tmp_path, layout):
+def test_stage_pre_generation_layout_recomputes(spark, tmp_path):
     """A sidecar of an older layout is not resumable: one that names no
     generation (the in-place layout from before generations), or one that
     names a generation but records its schema as ``simpleString`` text
     rather than Spark's JSON struct. The stage recomputes, and the
     clean-up after its commit removes the old files, leaving one
     generation."""
-    work = str(tmp_path / "old")
-    Pipeline(spark, work, {"p": 1}).stage("t", _rows_stage(spark, 3))
-    table, sidecar = os.path.join(work, "t"), os.path.join(work, "t._lineage.json")
-    with open(sidecar) as f:
-        lineage = json.load(f)
-    if layout == "in-place":
-        generation = os.path.join(table, lineage.pop("generation"))
-        for name in os.listdir(generation):
-            os.rename(os.path.join(generation, name), os.path.join(table, name))
-        os.rmdir(generation)
-    else:
-        lineage["schema"] = StructType.fromJson(lineage["schema"]).simpleString()
-    with open(sidecar, "w") as f:
-        json.dump(lineage, f)
-    pipe = Pipeline(spark, work, {"p": 1})
-    assert sorted(r.x for r in pipe.stage("t", _rows_stage(spark, 3)).collect()) == [0, 1, 2]
-    assert pipe.metrics["t"]["resumed"] is False
-    assert os.listdir(table) == [pipe.metrics["t"]["generation"]]
+    for layout in ["in-place", "simpleString schema"]:
+        work = str(tmp_path / layout)
+        Pipeline(spark, work, {"p": 1}).stage("t", _rows_stage(spark, 3))
+        table, sidecar = os.path.join(work, "t"), os.path.join(work, "t._lineage.json")
+        with open(sidecar) as f:
+            lineage = json.load(f)
+        if layout == "in-place":
+            generation = os.path.join(table, lineage.pop("generation"))
+            for name in os.listdir(generation):
+                os.rename(os.path.join(generation, name), os.path.join(table, name))
+            os.rmdir(generation)
+        else:
+            lineage["schema"] = StructType.fromJson(lineage["schema"]).simpleString()
+        with open(sidecar, "w") as f:
+            json.dump(lineage, f)
+        pipe = Pipeline(spark, work, {"p": 1})
+        assert sorted(r.x for r in pipe.stage("t", _rows_stage(spark, 3)).collect()) == [0, 1, 2], layout
+        assert pipe.metrics["t"]["resumed"] is False, layout
+        assert os.listdir(table) == [pipe.metrics["t"]["generation"]], layout
 
 
 def test_lineage_recorded(spark, er_run):
